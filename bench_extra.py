@@ -30,66 +30,6 @@ def timed(spark, label, fn, n=2):
     return best
 
 
-def profile_spatial_join(spark, sf_dir):
-    import __spark_entry__ as em
-    from pyspark.sql import functions as F
-    from geostructures_spark.operators import spatial_join as sj
-    from geostructures_spark.operators.tiling import cover_shapes, with_cell
-
-    q = em.queries()['spatial_join_circles']
-    timed(spark, 'spatial_join_circles full (collect)',
-          lambda: q(spark, sf_dir).collect())
-
-    # rebuild the inputs exactly as the query does
-    em._load(spark, sf_dir, 'customer', 'supplier')
-    pts = (spark.sql(em._pts_customer_sql())
-           .withColumnRenamed('pid', 'url'))
-    sup = spark.sql(em._pts_supplier_sql())
-    shapes = em._q_spatial_join_circles.__wrapped__(spark, sf_dir) \
-        if hasattr(em._q_spatial_join_circles, '__wrapped__') else None
-    # inline shape construction (copy of _q_spatial_join_circles)
-    shapes = sup.select(
-        F.col('qid').cast('long').alias('shape_id'),
-        F.lit('circle').alias('kind'),
-        F.struct(
-            F.col('q_lon').alias('center_lon'), F.col('q_lat').alias('center_lat'),
-            F.lit(500_000.0).alias('radius'),
-            *[F.lit(None).cast('double').alias(c) for c in (
-                'semi_major', 'semi_minor', 'rotation', 'inner_radius',
-                'outer_radius', 'angle_min', 'angle_max',
-                'min_lon', 'min_lat', 'max_lon', 'max_lat')],
-        ).alias('params'),
-        F.lit(None).cast('array<array<struct<lon:double,lat:double>>>').alias('rings'),
-        F.lit(None).cast('timestamp').alias('dt_start'),
-        F.lit(None).cast('timestamp').alias('dt_end'),
-        F.lit(None).cast('map<string,string>').alias('properties'),
-    )
-
-    timed(spark, '  catalog_size agg', lambda: sj._catalog_size(shapes, 4, 16))
-    n_shapes = sj._catalog_size(shapes, 4, 16)[0]
-    cover_parts = min(64, max(4, n_shapes // 25 + 1))
-    timed(spark, '  cover_shapes (noop)',
-          lambda: noop(cover_shapes(shapes, 4, 16, n_partitions=cover_parts)))
-    timed(spark, '  with_cell points (noop)',
-          lambda: noop(with_cell(pts, 4, 16)))
-    timed(spark, '  shape_broadcast collect',
-          lambda: sj._shape_broadcast(spark, shapes))
-
-    covers = cover_shapes(shapes, 4, 16, n_partitions=cover_parts)
-    dt_map = shapes.select('shape_id', 'dt_start', 'dt_end')
-    covers2 = covers.join(F.broadcast(dt_map), 'shape_id') \
-        .withColumnRenamed('cell', 'cell')
-    pc = with_cell(pts, 4, 16)
-    cand = pc.join(F.broadcast(covers2.select('cell', 'shape_id')), 'cell')
-    timed(spark, '  candidate join no-predicate (count)',
-          lambda: cand.count())
-    print('  candidate rows:', cand.count())
-
-    joined = sj.spatial_join_points(pts, shapes, length=4, base=16,
-                                    time_gated=False)
-    timed(spark, '  spatial_join_points (noop)', lambda: noop(joined))
-
-
 def profile_minhash(spark, sf_dir):
     import __spark_entry__ as em
     from pyspark.sql import functions as F
@@ -129,8 +69,6 @@ def main():
     from geostructures_spark.plans.session import get_session
     spark = get_session(app='bench_extra')
     section = sys.argv[1] if len(sys.argv) > 1 else 'all'
-    if section in ('all', 'spatial'):
-        profile_spatial_join(spark, sf_dir)
     if section in ('all', 'minhash'):
         profile_minhash(spark, sf_dir)
     if section in ('noop',):

@@ -445,6 +445,15 @@ def haversine_expr(lon1: Column, lat1: Column, lon2: Column, lat2: Column) -> Co
     return F.lit(EARTH_RADIUS_METERS) * c
 
 
+def haversine_sql(lon1: str, lat1: str, lon2: str, lat2: str) -> str:
+    """``haversine_expr`` as SQL text over SQL expressions: the same
+    operations in the same order, so the values are identical."""
+    a = (f'pow(sin((radians({lat2}) - radians({lat1})) / 2), 2) + '
+         f'cos(radians({lat1})) * cos(radians({lat2})) * '
+         f'pow(sin((radians({lon2}) - radians({lon1})) / 2), 2)')
+    return f'{EARTH_RADIUS_METERS!r}D * (2 * atan2(sqrt({a}), sqrt(1 - ({a}))))'
+
+
 def bearing_expr(lon1: Column, lat1: Column, lon2: Column, lat2: Column) -> Column:
     """Initial bearing degrees [0,360) (reference geodesic.py:63-74)."""
     rlon1, rlat1 = F.radians(lon1), F.radians(lat1)
@@ -516,28 +525,27 @@ def interval_union_exprs(s_start: Column, s_end: Column,
 
 # --- pandas UDFs over the NumPy kernels ------------------------------------
 
-def niemeyer_interleave_expr(qlon: Column, qlat: Column, length: int,
-                             base: int = 16) -> Column:
-    """Niemeyer cell string from already-quantized integer axis codes:
-    MSB-first bit interleave (lon first) formatted as the base-16 cell.
+def niemeyer_interleave_sql(qlon: str, qlat: str, length: int,
+                            base: int = 16) -> str:
+    """Niemeyer cell string from already-quantized integer axis codes, as
+    SQL text: MSB-first bit interleave (lon first) formatted as the base-16
+    cell. ``qlon``/``qlat`` are SQL expressions (column names, typically).
     Base 16 only (4 bits/char -> an even split of bits across axes and a
-    charset identical to lowercase hex)."""
+    charset identical to lowercase hex). One string, so building it costs
+    no JVM round trips."""
     if base != 16:
-        raise ValueError('niemeyer_interleave_expr supports base 16 only')
+        raise ValueError('niemeyer_interleave_sql supports base 16 only')
     total = 4 * length
     m = total // 2
-    code = F.lit(0).cast('long')
-    for b in range(m):
-        code = code + F.shiftleft(
-            F.shiftright(qlon, m - 1 - b).bitwiseAND(F.lit(1)), total - 1 - 2 * b)
-        code = code + F.shiftleft(
-            F.shiftright(qlat, m - 1 - b).bitwiseAND(F.lit(1)), total - 2 - 2 * b)
-    return F.format_string(f'%0{length}x', code)
+    bits = [f'shiftleft(shiftright({q}, {m - 1 - b}) & 1, {total - 1 - 2 * b - k})'
+            for b in range(m) for k, q in enumerate((qlon, qlat))]
+    return f"format_string('%0{length}x', {' | '.join(bits)})"
 
 
-def niemeyer_quantize_exprs(lon: Column, lat: Column, length: int,
-                            base: int = 16):
-    """(qlon, qlat) integer axis codes for the closed-form Niemeyer encode.
+def niemeyer_quantize_sql(lon: str, lat: str, length: int,
+                          base: int = 16):
+    """(qlon, qlat) integer axis codes for the closed-form Niemeyer encode,
+    as SQL text over the SQL expressions ``lon``/``lat``.
 
     ``ceil(q) - 1`` (clamped to the domain) instead of ``floor(q)``: the
     reference's bisection uses strict ``coord > mid`` (geohash.py:161,169),
@@ -547,26 +555,24 @@ def niemeyer_quantize_exprs(lon: Column, lat: Column, length: int,
     bit-identical to kernels.niemeyer.encode over dyadic boundary grids,
     millidegree lattices and 20k random points at lengths 4/6/8."""
     if base != 16:
-        raise ValueError('niemeyer_quantize_exprs supports base 16 only')
+        raise ValueError('niemeyer_quantize_sql supports base 16 only')
     m = (4 * length) // 2
-    scale = F.lit(float(1 << m))
-    hi = F.lit((1 << m) - 1)
-    qlon = F.least(F.greatest(
-        F.ceil(((lon + F.lit(180.0)) / F.lit(360.0)) * scale) - 1,
-        F.lit(0)), hi).cast('long')
-    qlat = F.least(F.greatest(
-        F.ceil(((lat + F.lit(90.0)) / F.lit(180.0)) * scale) - 1,
-        F.lit(0)), hi).cast('long')
-    return qlon, qlat
+
+    def q(x, off, span):
+        return (f'CAST(least(greatest(ceil((({x}) + {off!r}D) / {span!r}D * '
+                f'{float(1 << m)!r}D) - 1, 0), {(1 << m) - 1}) AS BIGINT)')
+    return q(lon, 180.0, 360.0), q(lat, 90.0, 180.0)
 
 
-def niemeyer_cell_expr(lon: Column, lat: Column, length: int,
+def niemeyer_cell_expr(lon: str, lat: str, length: int,
                        base: int = 16) -> Column:
-    """Closed-form Niemeyer encode as a pure Column expression (base 16):
-    whole-stage codegen, no Python worker — the JVM twin of
-    ``niemeyer_encode_udf`` (value-identical, see niemeyer_quantize_exprs)."""
-    qlon, qlat = niemeyer_quantize_exprs(lon, lat, length, base)
-    return niemeyer_interleave_expr(qlon, qlat, length, base)
+    """Closed-form Niemeyer encode of the SQL expressions ``lon``/``lat``
+    (base 16) as one Column: whole-stage codegen, no Python worker — the
+    JVM twin of ``niemeyer_encode_udf`` (value-identical, see
+    niemeyer_quantize_sql). Each quantized code appears once per bit in
+    the text; codegen's subexpression elimination computes it once."""
+    qlon, qlat = niemeyer_quantize_sql(lon, lat, length, base)
+    return F.expr(niemeyer_interleave_sql(qlon, qlat, length, base))
 
 
 def niemeyer_encode_udf(length: int, base: int):

@@ -2,11 +2,18 @@
 
 Architecture (SURVEY.md §3.2):
 
-  points --with_cell--> keyed by cell
-  shapes --cover_shapes--> (shape_id, cell), broadcast
+  points --packed (i, j) cell key (JVM quantize)--> keyed by cell
+  shapes --JVM window cover (SQL text)--> (shape_id, cell), broadcast
   candidates = points ⋈ broadcast(covers) ON cell        (equi-join)
   time gate  = right-open interval Column predicate      (JVM, pre-UDF)
-  exact      = Arrow-batched kernel predicate per shape  (pandas UDF)
+  exact      = JVM haversine for all-circle catalogs, else an
+               Arrow-batched kernel predicate per shape  (pandas UDF)
+
+The cover is one closed-form window per shape (_window_cols): the
+spherical-cap box of a circle, ellipse or ring, trimmed by distance, and
+the min/max box of every other kind, enumerated as cell-index ranges in
+the JVM. Only a shape whose window exceeds _SQL_COVER_MAX_BOXES cells falls
+back to the per-shape Python cover (``tiling.cover_shapes``), unioned in.
 
 The cell equi-join replaces the reference's per-pair sweep-line pruning
 (_geometry.py:223-316) as the candidate structure; the exact predicate
@@ -25,7 +32,7 @@ Scale notes:
 
 from __future__ import annotations
 
-from typing import Dict, Optional
+from typing import List, Tuple
 
 import numpy as np
 import pandas as pd
@@ -45,33 +52,36 @@ _BROADCAST_MAX_SHAPES = 200_000
 _BROADCAST_MAX_RING_VERTS = 20_000_000   # ~640 MB of packed ring floats
 
 
-def _plain_circle_expr():
-    """Plain circle = no holes, radius set (Columns built lazily — module
-    import must not require an active SparkContext)."""
-    return (
-        (F.col('kind') == 'circle') &
-        F.col('params').getField('radius').isNotNull() &
-        (F.size(F.coalesce(
-            F.col('rings'),
-            F.array().cast('array<array<struct<lon:double,lat:double>>>'))) <= 0))
+def _params_sql(shapes: DataFrame):
+    """``params.<field>`` as SQL text, or a typed NULL for a field the
+    catalog's ``params`` struct does not carry (callers pass narrow structs,
+    e.g. circles with only center and radius)."""
+    fields = set(shapes.schema['params'].dataType.fieldNames())
+    return lambda f: f'params.{f}' if f in fields else 'CAST(NULL AS DOUBLE)'
+
+
+def _plain_circle_sql(p) -> str:
+    """Plain circle = no holes, radius set."""
+    return (f"(kind = 'circle' AND {p('radius')} IS NOT NULL AND "
+            f'coalesce(size(rings), 0) <= 0)')
 
 
 def _catalog_size(shapes: DataFrame, length: int = None, base: int = 16):
     """(n_shapes, total ring vertices, n_plain_circles, n_sql_cover) — ONE
     cheap agg over the catalog side deciding broadcast vs shipped-spec
     execution, the all-circle JVM exact predicate (plain circle = no holes,
-    radius set), and how many shapes the pure-SQL circle cover can serve
-    (when ``length`` is given and base is 16)."""
-    sql_ok = (_sql_cover_ok_expr(length) if (length is not None and base == 16)
-              else F.lit(False))
-    row = shapes.agg(
-        F.count('*').alias('n'),
-        F.coalesce(F.sum(F.aggregate(
-            F.coalesce(F.col('rings'),
-                       F.array().cast('array<array<struct<lon:double,lat:double>>>')),
-            F.lit(0), lambda acc, ring: acc + F.size(ring))), F.lit(0)).alias('verts'),
-        F.coalesce(F.sum(_plain_circle_expr().cast('int')), F.lit(0)).alias('plain'),
-        F.coalesce(F.sum(sql_ok.cast('int')), F.lit(0)).alias('sql_cover'),
+    radius set), and how many shapes the JVM window cover can serve (when
+    ``length`` is given and base is 16; ``shapes`` may already carry its
+    window columns, see _with_window)."""
+    p = _params_sql(shapes)
+    windowed = length is not None and base == 16
+    if windowed and '_ok' not in shapes.columns:
+        shapes = _with_window(shapes, length)
+    row = shapes.selectExpr(
+        'count(*) AS n',
+        'coalesce(sum(aggregate(rings, 0, (acc, ring) -> acc + size(ring))), 0) AS verts',
+        f'coalesce(sum(CAST({_plain_circle_sql(p)} AS INT)), 0) AS plain',
+        f"coalesce(sum(CAST({'_ok' if windowed else 'false'} AS INT)), 0) AS sql_cover",
     ).collect()[0]
     return (int(row['n']), int(row['verts']), int(row['plain']),
             int(row['sql_cover']))
@@ -162,78 +172,110 @@ def _exact_predicate_udf(bc, predicate: str):
 _SQL_COVER_MAX_BOXES = 65_536
 
 
-def _circle_window_exprs(length: int):
-    """Bbox-window box-index Columns for plain circles (keyed off the
-    ``params`` struct): the spherical-cap bounding box. Every point p with
-    hav(p, center) <= r satisfies |lat_p - clat| <= ang and |lon_p - clon|
-    <= asin(sin(ang)/cos(clat)) (cap not containing a pole), so the
-    window — with a +-1 cell slack for quantization-rule edge cases —
-    contains every cell that holds a matching point; cells outside it can
-    only hold candidates the exact predicate would reject anyway.
-    Full-longitude fallback when the cap touches a pole or the window
-    crosses the antimeridian (mirroring the Python cover's fallback).
+def _double(x) -> str:
+    """A DOUBLE literal in SQL text (a bare ``6371000.0`` parses as DECIMAL)."""
+    return f'{float(x)!r}D'
 
-    Returns (i0, i1, j0, j1, nbox, full) Columns; NULL-free for plain
-    circles (radius non-null)."""
+
+def _window_cols(p, length: int) -> List[Tuple[str, str]]:
+    """(name, SQL) columns of one shape's cover window, each reading the
+    shape's columns or earlier names (lateral aliases in one selectExpr):
+    the box-index range ``_i0.._i1`` x ``_j0.._j1`` of the cells at
+    ``length`` that can hold a point the exact predicate accepts, the
+    ``_r``/``_clon``/``_clat``/``_full`` the trim reads, and ``_ok`` (the
+    window is finite and within _SQL_COVER_MAX_BOXES; never NULL, so a
+    shape the window cannot serve routes to ``cover_shapes``).
+
+    - circle, ellipse and ring accept only points within ``_r`` (radius,
+      the larger semi-axis, outer radius) of the center: the window is the
+      spherical cap's bounding box. Every p with hav(p, center) <= r has
+      |lat_p - clat| <= ang and |lon_p - clon| <= asin(sin(ang)/cos(clat))
+      when no pole is inside; the window falls back to the full longitude
+      range when the cap touches a pole or crosses the antimeridian.
+    - box accepts only points inside its min/max bounds; point only its
+      center; polygon, linestring and the multi-kinds only points inside
+      the min/max of their vertices (``flatten(rings)``).
+
+    A +-1 cell slack covers the points' quantization rule (a point on a
+    cell edge belongs to the lower cell), so the window holds every cell
+    with a matching point; cells outside it can only hold candidates the
+    exact predicate rejects."""
     from geostructures_spark.kernels.geodesy import EARTH_RADIUS_METERS
     m = (4 * length) // 2
-    w = 360.0 / (1 << m)
-    h = 180.0 / (1 << m)
-    hi = (1 << m) - 1
-    clon = F.col('params').getField('center_lon')
-    clat = F.col('params').getField('center_lat')
-    ang = F.degrees(F.col('params').getField('radius').cast('double') /
-                    F.lit(EARTH_RADIUS_METERS))
-    lat_lo = clat - ang
-    lat_hi = clat + ang
-    pole = (lat_hi >= 90.0) | (lat_lo <= -90.0)
-    # tight cap extent; the asin argument is < 1 when no pole is inside,
-    # clamped against fp overshoot
-    extent = F.degrees(F.asin(F.least(
-        F.sin(F.radians(ang)) /
-        F.greatest(F.cos(F.radians(clat)), F.lit(1e-12)),
-        F.lit(1.0))))
-    full = pole | (clon - extent < -180.0) | (clon + extent > 180.0)
-    lon_lo = F.when(full, F.lit(-180.0)).otherwise(clon - extent)
-    lon_hi = F.when(full, F.lit(180.0)).otherwise(clon + extent)
-    i0 = F.greatest(F.floor((lon_lo + 180.0) / w) - 1, F.lit(0)).cast('long')
-    i1 = F.least(F.floor((lon_hi + 180.0) / w) + 1, F.lit(hi)).cast('long')
-    j0 = F.greatest(F.floor((F.greatest(lat_lo, F.lit(-90.0)) + 90.0) / h) - 1,
-                    F.lit(0)).cast('long')
-    j1 = F.least(F.floor((F.least(lat_hi, F.lit(90.0)) + 90.0) / h) + 1,
-                 F.lit(hi)).cast('long')
-    nbox = (i1 - i0 + 1) * (j1 - j0 + 1)
-    return i0, i1, j0, j1, nbox, full
+    w, h, hi = 360.0 / (1 << m), 180.0 / (1 << m), (1 << m) - 1
+
+    def bound(agg, axis, center, half):
+        sign, pick = ('-', 'least') if agg == 'min' else ('+', 'greatest')
+        return (f"CASE WHEN kind = 'box' THEN {pick}({p('min_' + axis)}, {p('max_' + axis)}) "
+                f"WHEN kind = 'point' THEN {center} "
+                f"WHEN kind IN ('circle', 'ellipse', 'ring') THEN {center} {sign} {half} "
+                f'ELSE array_{agg}(flatten(rings).{axis}) END')
+
+    def index(x, lo, span, size):  # clamp into the domain, then quantize
+        return (f'floor((least(greatest({x}, {_double(lo)}), {_double(lo + span)}) - {_double(lo)})'
+                f' / {_double(size)})')
+    return [
+        ('_r', f"CAST(CASE kind WHEN 'circle' THEN {p('radius')} "
+               f"WHEN 'ellipse' THEN greatest({p('semi_major')}, {p('semi_minor')}) "
+               f"WHEN 'ring' THEN {p('outer_radius')} END AS DOUBLE)"),
+        ('_clon', p('center_lon')),
+        ('_clat', p('center_lat')),
+        ('_ang', f'degrees(greatest(_r, 0D) / {_double(EARTH_RADIUS_METERS)})'),
+        # the asin argument is < 1 when no pole is inside; clamped against
+        # fp overshoot
+        ('_ext', 'degrees(asin(least(sin(radians(_ang)) / '
+                 'greatest(cos(radians(_clat)), 1e-12D), 1D)))'),
+        ('_full', '(abs(_clat) + _ang >= 90D OR abs(_clon) + _ext > 180D)'),
+        ('_lonhalf', 'CASE WHEN _full THEN 360D ELSE _ext END'),
+        ('_i0', f"greatest({index(bound('min', 'lon', '_clon', '_lonhalf'), -180, 360, w)}"
+                f' - 1, 0)'),
+        ('_i1', f"least({index(bound('max', 'lon', '_clon', '_lonhalf'), -180, 360, w)}"
+                f' + 1, {hi})'),
+        ('_j0', f"greatest({index(bound('min', 'lat', '_clat', '_ang'), -90, 180, h)} - 1, 0)"),
+        ('_j1', f"least({index(bound('max', 'lat', '_clat', '_ang'), -90, 180, h)} + 1, {hi})"),
+        ('_ok', f'coalesce((_i1 - _i0 + 1) * (_j1 - _j0 + 1) <= {_SQL_COVER_MAX_BOXES}, false)'),
+    ]
+
+
+def _with_window(shapes: DataFrame, length: int) -> DataFrame:
+    """``shapes`` plus its window columns (_window_cols)."""
+    return shapes.selectExpr('*', *(f'{sql} AS {name}' for name, sql in
+                                     _window_cols(_params_sql(shapes), length)))
 
 
 def _sql_cover_ok_expr(length: int):
-    """Deterministic routing predicate: this shape's cover can be built by
-    the pure-SQL circle window (plain circle, bounded box count). Never
-    NULL (FALSE for non-circles by three-valued AND)."""
-    nbox = _circle_window_exprs(length)[4]
-    return _plain_circle_expr() & (nbox <= _SQL_COVER_MAX_BOXES)
+    """Deterministic routing predicate over a SHAPES_SCHEMA_DDL catalog: this
+    shape's cover is the JVM window; the rest go to ``cover_shapes``. Never
+    NULL. ``_ok`` of _window_cols with its lateral names substituted, for
+    callers that filter a plain catalog (perfbench's cover probes); the
+    operator itself reads ``_ok`` from _with_window."""
+    import re
+    cols = _window_cols(lambda f: f'params.{f}', length)
+    text = '_ok'
+    for name, sql in reversed(cols):
+        text = re.sub(rf'\b{name}\b', f'({sql})', text)
+    return F.expr(text)
 
 
-def _circle_cover_sql(circles: DataFrame, length: int,
-                      drop_chars: int = 0,
-                      with_params: bool = False,
-                      numeric_key: bool = False) -> DataFrame:
-    """(shape_id, cell) cover rows for plain circles as a pure Column plan:
-    the bbox enumeration window of kernels.tiling_niemeyer._enum_cover,
-    trimmed by a triangle-inequality distance test — a SUPERSET of the
-    Python cover, so the exact containment predicate downstream sees every
-    candidate it saw before (plus a few extra it rejects; results
-    identical). Cells are built by interleaving the (i, j) box indices
-    directly — no Python stage. Base 16 only; caller routes with
-    _sql_cover_ok_expr so the per-shape explode stays bounded.
+def _window_cover(windowed: DataFrame, length: int, drop_chars: int = 0,
+                  carry=(), numeric_key: bool = False) -> DataFrame:
+    """(shape_id, cell, *carry) cover rows of shapes that carry their
+    window columns (_with_window; callers keep only ``_ok`` shapes so the
+    per-shape explode stays bounded): the window is enumerated, and
+    circle, ellipse and ring cells are trimmed by a triangle-inequality
+    distance test. The cover is a SUPERSET of the cells holding a matching
+    point, so the exact containment predicate downstream returns the same
+    rows. Cells are built by interleaving the (i, j) box indices directly —
+    no Python stage. Base 16 only. ``carry`` names further columns kept on
+    every row (``dt_start``..., or the trim's ``_clon``, ``_clat``, ``_r``).
 
-    Trim-safety: a cell containing a point p inside the circle satisfies
-    hav(center, clamp(center)) <= hav(center, p) + hav(p, clamp(center))
-    <= r + (widest parallel arc + meridian height of the cell), so keeping
-    every cell with clamped-distance <= r + pad can drop no needed cell.
-    Clamping ignores longitude wrap, which over-estimates distance only
-    when the window wraps — those shapes fall into the full-longitude
-    branch, where the trim is skipped.
+    Trim-safety: a cell containing a point p within ``_r`` of the center
+    satisfies hav(center, clamp(center)) <= hav(center, p) +
+    hav(p, clamp(center)) <= r + (widest parallel arc + meridian height of
+    the cell), so keeping every cell with clamped-distance <= r + pad can
+    drop no needed cell. Clamping ignores longitude wrap, which
+    over-estimates distance only when the window wraps — those shapes take
+    the full-longitude branch, where the trim is skipped.
 
     ``drop_chars`` > 0 emits the cover at PARENT-cell granularity (the
     Niemeyer prefix of length - drop_chars chars; one dropped char = 2
@@ -241,66 +283,49 @@ def _circle_cover_sql(circles: DataFrame, length: int,
     candidate-superset guarantee — the knob that keeps the broadcast
     relation small when candidates are cheap to reject (all-circle JVM
     predicate). Join such covers against a substring of the points' cell
-    column."""
-    import math as _math
+    column.
+
+    ``numeric_key`` emits the packed ``(i << 32) | j`` BIGINT instead of
+    the cell string; only valid when the points side derives the same key
+    from the same quantization (caller-guarded)."""
+    import math
 
     from geostructures_spark.functions.geo import (
-        haversine_expr, niemeyer_interleave_expr)
+        haversine_sql, niemeyer_interleave_sql)
     from geostructures_spark.kernels.geodesy import EARTH_RADIUS_METERS
     out_len = length - drop_chars
     assert out_len >= 1
-    s = 2 * drop_chars          # bits dropped per axis
-    m = (4 * length) // 2
-    w = 360.0 / (1 << (m - s))  # parent-cell geometry
-    h = 180.0 / (1 << (m - s))
-    i0, i1, j0, j1, _, full = _circle_window_exprs(length)
-    clon = F.col('params').getField('center_lon')
-    clat = F.col('params').getField('center_lat')
-    r = F.col('params').getField('radius').cast('double')
-    if s:
-        i0, i1 = F.shiftright(i0, s), F.shiftright(i1, s)
-        j0, j1 = F.shiftright(j0, s), F.shiftright(j1, s)
-    base = circles.select(
-        'shape_id', clon.alias('_clon'), clat.alias('_clat'),
-        r.alias('_r'), full.alias('_full'),
-        i0.alias('_i0'), i1.alias('_i1'),
-        j0.alias('_j0'), j1.alias('_j1'))
+    s = 2 * drop_chars  # bits dropped per axis
+    m = (4 * out_len) // 2
+    w, h = 360.0 / (1 << m), 180.0 / (1 << m)  # (parent-)cell geometry
+    base = windowed.selectExpr(
+        'shape_id', *(c for c in carry if c not in ('_clon', '_clat', '_r')),
+        '_r', '_clon', '_clat', '_full',
+        *(f'shiftright(_{k}, {s}) AS _{k}' for k in ('i0', 'i1', 'j0', 'j1')))
     if drop_chars == 0:
         # parallelize big fine-grained explodes: the shapes side typically
         # scans from a small file (1-2 input partitions) — a tiny keyed
         # repartition spreads the window enumeration over the cluster.
         # Prefix covers (~16x fewer rows per dropped char) skip the extra
         # shuffle stage.
-        spark = circles.sparkSession
-        n_parts = max(8, spark.sparkContext.defaultParallelism)
+        n_parts = max(8, windowed.sparkSession.sparkContext.defaultParallelism)
         base = base.repartition(n_parts, 'shape_id')
-    rows = (base
-            .select('shape_id', '_clon', '_clat', '_r', '_full', '_j0', '_j1',
-                    F.explode(F.sequence('_i0', '_i1')).alias('_i'))
-            .select('shape_id', '_clon', '_clat', '_r', '_full', '_i',
-                    F.explode(F.sequence('_j0', '_j1')).alias('_j')))
-    lon_lo = F.lit(-180.0) + F.col('_i') * w
-    lat_lo = F.lit(-90.0) + F.col('_j') * h
-    lon_cl = F.least(F.greatest(F.col('_clon'), lon_lo), lon_lo + w)
-    lat_cl = F.least(F.greatest(F.col('_clat'), lat_lo), lat_lo + h)
+    lon_lo, lat_lo = f'(-180D + _i * {_double(w)})', f'(-90D + _j * {_double(h)})'
+    lon_cl = f'least(greatest(_clon, {lon_lo}), {lon_lo} + {_double(w)})'
+    lat_cl = f'least(greatest(_clat, {lat_lo}), {lat_lo} + {_double(h)})'
     # widest parallel of the cell (the latitude nearest the equator)
-    lat_wide = F.when((lat_lo <= 0.0) & (lat_lo + h >= 0.0), F.lit(0.0)) \
-        .otherwise(F.least(F.abs(lat_lo), F.abs(lat_lo + h)))
-    pad = (haversine_expr(F.lit(0.0), lat_wide, F.lit(w), lat_wide) +
-           F.lit(EARTH_RADIUS_METERS * _math.radians(h)))
-    keep = F.col('_full') | (
-        haversine_expr(F.col('_clon'), F.col('_clat'), lon_cl, lat_cl)
-        <= F.col('_r') + pad)
-    extra = ['_clon', '_clat', '_r'] if with_params else []
-    # numeric_key: skip building the cell STRING — the join key is the
-    # packed (i, j) box-index pair. Only valid when the points side derives
-    # the same packed key from the same quantization (caller-guarded), and
-    # it lets Catalyst prune the string encode wholesale.
-    key = (F.shiftleft(F.col('_i'), 32).bitwiseOR(F.col('_j')).alias('cell')
-           if numeric_key else
-           niemeyer_interleave_expr(F.col('_i'), F.col('_j'), out_len)
-           .alias('cell'))
-    return rows.filter(keep).select('shape_id', key, *extra)
+    lat_wide = (f'CASE WHEN {lat_lo} <= 0D AND {lat_lo} + {_double(h)} >= 0D THEN 0D '
+                f'ELSE least(abs({lat_lo}), abs({lat_lo} + {_double(h)})) END')
+    pad = (f"{haversine_sql('0D', lat_wide, _double(w), lat_wide)} + "
+           f'{_double(EARTH_RADIUS_METERS * math.radians(h))}')
+    keep = (f'_r IS NULL OR _full OR '
+            f"{haversine_sql('_clon', '_clat', lon_cl, lat_cl)} <= _r + {pad}")
+    key = ('shiftleft(_i, 32) | _j' if numeric_key
+           else niemeyer_interleave_sql('_i', '_j', out_len))
+    return (base.selectExpr('*', 'explode(sequence(_i0, _i1)) AS _i')
+            .selectExpr('*', 'explode(sequence(_j0, _j1)) AS _j')
+            .filter(keep)
+            .selectExpr('shape_id', f'{key} AS cell', *carry))
 
 
 def spatial_join_points(
@@ -333,62 +358,59 @@ def spatial_join_points(
     if not had_cell:
         points = with_cell(points, length, base, cell_col=cell_col)
 
-    n_shapes, n_verts, n_plain, n_sql = _catalog_size(shapes, length, base)
+    windowed = _with_window(shapes, length) if base == 16 else shapes
+    n_shapes, n_verts, n_plain, n_sql = _catalog_size(windowed, length, base)
     use_broadcast = (n_shapes <= max_broadcast_shapes and
                      n_verts <= max_broadcast_ring_verts)
     all_plain_circles = n_shapes > 0 and n_plain == n_shapes
     gated = time_gated and 'warc_ts' in points.columns
+    dt_cols = ['dt_start', 'dt_end'] if gated else []
+    all_window = 0 < n_sql == n_shapes
 
-    # cover side: plain circles within the box cap get the pure-SQL window
-    # cover (no Python stage); everything else keeps the per-shape
-    # applyInPandas covering. The SQL cover is a superset of the Python one
-    # for the same circle, so candidates only grow and the exact predicate
-    # keeps results identical. When ALL covers are SQL-built, the JVM
-    # predicate is cheap, and the covers broadcast, emit the cover at
-    # parent-cell granularity (one prefix char dropped): ~16x fewer rows in
-    # the broadcast relation for a modest candidate inflation the codegen
-    # haversine filter absorbs.
-    prefix_drop = 1 if (n_sql == n_shapes and n_sql > 0 and use_broadcast
-                        and all_plain_circles and length >= 2) else 0
-    # when every cover row is SQL-built for a plain circle, the circle's
+    # cover side: every shape whose window stays within the box cap gets
+    # the JVM window cover (no Python stage); only the rest keep the
+    # per-shape applyInPandas covering. When ALL covers are window-built,
+    # the JVM predicate is cheap, and the covers broadcast, emit the cover
+    # at parent-cell granularity (one prefix char dropped): ~16x fewer rows
+    # in the broadcast relation for a modest candidate inflation the
+    # codegen haversine filter absorbs.
+    prefix_drop = 1 if (all_window and use_broadcast and all_plain_circles
+                        and length >= 2) else 0
+    # when every cover row is window-built for a plain circle, the circle's
     # (center, radius) triple rides the cover rows themselves — the exact
     # predicate then needs NO second join at all
-    carry_params = all_plain_circles and n_sql == n_shapes and n_sql > 0
+    carry_params = all_plain_circles and all_window
     # when we assigned the points' cells ourselves (same closed-form
-    # quantization as the SQL cover windows), join on the packed (i, j)
+    # quantization as the cover windows), join on the packed (i, j)
     # integer key instead of cell strings: no string building on either
     # side, and Catalyst prunes the points' string encode wholesale when
     # the caller doesn't read it
-    numeric_key = carry_params and not had_cell and base == 16
-    if n_sql > 0:
-        sql_ok = _sql_cover_ok_expr(length)
-        covers = _circle_cover_sql(shapes.filter(sql_ok), length, prefix_drop,
-                                   with_params=carry_params,
-                                   numeric_key=numeric_key)
-        if n_sql < n_shapes:
-            rest = shapes.filter(~sql_ok)
-            cover_parts = min(64, max(4, (n_shapes - n_sql) // 25 + 1))
-            covers = covers.unionByName(
-                cover_shapes(rest, length, base, n_partitions=cover_parts))
-    else:
-        cover_parts = min(64, max(4, n_shapes // 25 + 1))
-        covers = cover_shapes(shapes, length, base, n_partitions=cover_parts)
-
-    if gated:
-        # only attach interval columns when the gate is live — an untimed
-        # join skips the dt map join outright
-        dt_map = shapes.select('shape_id', 'dt_start', 'dt_end')
-        covers = covers.join(F.broadcast(dt_map) if use_broadcast else dt_map,
-                             'shape_id')
+    numeric_key = all_window and not had_cell
+    # the time interval rides the window cover rows (no dt join); the
+    # Python-covered rest joins it by shape_id
+    covers = None
+    if n_sql:
+        covers = _window_cover(
+            windowed.filter('_ok'), length, prefix_drop,
+            carry=dt_cols + (['_clon', '_clat', '_r'] if carry_params else []),
+            numeric_key=numeric_key)
+    if not all_window:
+        rest = windowed.filter('NOT _ok').select(*shapes.columns) if n_sql else shapes
+        rest_cover = cover_shapes(
+            rest, length, base,
+            n_partitions=min(64, max(4, (n_shapes - n_sql) // 25 + 1)))
+        if gated:
+            dt_map = rest.select('shape_id', *dt_cols)
+            rest_cover = rest_cover.join(
+                F.broadcast(dt_map) if use_broadcast else dt_map, 'shape_id')
+        covers = rest_cover if covers is None else covers.unionByName(rest_cover)
 
     if numeric_key:
-        from geostructures_spark.functions.geo import niemeyer_quantize_exprs
+        from geostructures_spark.functions.geo import niemeyer_quantize_sql
         s = 2 * prefix_drop
-        qlon, qlat = niemeyer_quantize_exprs(F.col('lon'), F.col('lat'),
-                                             length)
-        points = points.withColumn(
-            '_ck', F.shiftleft(F.shiftright(qlon, s), 32)
-            .bitwiseOR(F.shiftright(qlat, s)))
+        qlon, qlat = niemeyer_quantize_sql('lon', 'lat', length)
+        points = points.withColumn('_ck', F.expr(
+            f'shiftleft(shiftright({qlon}, {s}), 32) | shiftright({qlat}, {s})'))
         pkey = '_ck'
     elif prefix_drop:
         points = points.withColumn(
@@ -413,7 +435,6 @@ def spatial_join_points(
         covers = covers.withColumnRenamed('cell', pkey)
         join_key = pkey
 
-    dt_cols = ['dt_start', 'dt_end'] if gated else []
     param_cols = ['_clon', '_clat', '_r'] if carry_params else []
     covers_sel = covers.select(join_key, 'shape_id', *dt_cols, *param_cols)
     cand = points.join(F.broadcast(covers_sel) if use_broadcast else covers_sel,
@@ -434,18 +455,14 @@ def spatial_join_points(
         # rides the cover rows when all covers are SQL-built (no second
         # join); otherwise it joins by shape_id (24 bytes/shape — never
         # driver-collected on the no-broadcast path).
-        from geostructures_spark.functions.geo import haversine_expr
+        from geostructures_spark.functions.geo import haversine_sql
         if not carry_params:
-            params = shapes.select(
-                'shape_id',
-                F.col('params').getField('center_lon').alias('_clon'),
-                F.col('params').getField('center_lat').alias('_clat'),
-                F.col('params').getField('radius').cast('double').alias('_r'))
+            params = shapes.selectExpr(
+                'shape_id', 'params.center_lon AS _clon',
+                'params.center_lat AS _clat', 'CAST(params.radius AS DOUBLE) AS _r')
             cand = cand.join(F.broadcast(params) if use_broadcast else params,
                              'shape_id')
-        out = (cand.filter(haversine_expr(F.col('lon'), F.col('lat'),
-                                          F.col('_clon'), F.col('_clat'))
-                           <= F.col('_r'))
+        out = (cand.filter(f"{haversine_sql('lon', 'lat', '_clon', '_clat')} <= _r")
                .drop('_clon', '_clat', '_r'))
     elif use_broadcast:
         bc = _shape_broadcast(spark, shapes)

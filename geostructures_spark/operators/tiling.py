@@ -111,7 +111,7 @@ def with_cell(df: DataFrame, length: int = 8, base: int = 16,
         # Arrow boundary on the (big) points side of cell equi-joins
         from geostructures_spark.functions.geo import niemeyer_cell_expr
         return df.withColumn(cell_col,
-                             niemeyer_cell_expr(F.col(lon), F.col(lat), length))
+                             niemeyer_cell_expr(f'`{lon}`', f'`{lat}`', length))
     else:
         enc = niemeyer_encode_udf(length, base)
     return df.withColumn(cell_col, enc(F.col(lon), F.col(lat)))
@@ -134,8 +134,13 @@ def cover_shapes(shapes: DataFrame, length: int = 8, base: int = 16,
                  n_partitions: int = None) -> DataFrame:
     """shapes -> (shape_id, cell) cover rows (hash_shape semantics:
     NiemeyerHasher geohash.py:746-764 / H3Hasher geohash.py:512-542). Runs
-    per-shape covering in applyInPandas, partitioned by shape_id; output
-    feeds the broadcast side of the spatial join."""
+    per-shape covering in applyInPandas, partitioned by shape_id.
+
+    The hash_shape cover keeps the cells whose box intersects the shape's
+    discretized outline, so it can omit an edge cell that still holds a
+    matching point (e.g. cells of the row a box's top edge runs through):
+    it is not a safe candidate filter. The spatial join covers with its
+    JVM window and calls this only for windows over its budget."""
     from geostructures_spark.kernels import tiling_niemeyer as tn
     from geostructures_spark.kernels import h3_cover as hc
     from geostructures_spark.operators.ringio import (

@@ -104,6 +104,20 @@ def main() -> int:
           f'specs through the join (no driver collect)')
     ok &= spec
 
+    # mixed catalog within the window budget: every cover is the JVM window
+    # (no Python cover stage) and the join keys on the packed BIGINT cell
+    # index, not a cell string
+    import re
+    mixed = shapes.drop('properties').unionByName(
+        poly.withColumn('shape_id', F.col('shape_id') + 1_000_000))
+    plan = formatted(spatial_join_points(pts, mixed, length=4, base=16,
+                                         time_gated=False))
+    window = ('MapInPandas' not in plan and
+              re.search(r'Left keys \[1\]: \[_ck#\d+L\]', plan) is not None)
+    print(f'[{"OK" if window else "FAIL"}] mixed catalog covers in the JVM '
+          f'window (no MapInPandas) and joins on a bigint key')
+    ok &= window
+
     # bucketed co-located join: repeated joins on the points' cell key scan
     # pre-bucketed storage with NO Exchange on either side
     from geostructures_spark.plans.bucketing import bucketed_join, write_bucketed

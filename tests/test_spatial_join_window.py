@@ -1,0 +1,188 @@
+"""The spatial join's JVM window cover: exact results against brute force on
+mixed catalogs, the window as a superset of the Python ``hash_shape``
+cover for every shape kind, and the over-cap fallback to ``cover_shapes``.
+"""
+
+from collections import Counter
+
+import numpy as np
+import pytest
+
+from geostructures_spark.plans.session import get_session
+
+
+@pytest.fixture(scope='module')
+def spark():
+    s = get_session(app='tests_window', cores=4, shuffle_partitions=8)
+    yield s
+
+
+def _gate(start, end, t) -> bool:
+    """Right-open instant-in-interval; untimed shapes match all times."""
+    if start is None or end is None:
+        return True
+    return start == t if start == end else start <= t < end
+
+
+def _brute_force(points, shapes, time_gated):
+    """(shape_id, url, point_idx) of every point x shape pair the exact
+    kernel accepts."""
+    from geostructures_spark.kernels.shapes import shape_contains_points
+    from geostructures_spark.operators.tiling import shape_row_to_kernel
+    pts = points.select('url', 'point_idx', 'lon', 'lat',
+                        *(['warc_ts'] if time_gated else [])).collect()
+    lons = np.array([p.lon for p in pts], dtype=np.float64)
+    lats = np.array([p.lat for p in pts], dtype=np.float64)
+    out = Counter()
+    for row in shapes.collect():
+        d = row.asDict(recursive=True)
+        hit = shape_contains_points(shape_row_to_kernel(d), lons, lats)
+        for k in np.flatnonzero(hit):
+            p = pts[k]
+            if not time_gated or _gate(d['dt_start'], d['dt_end'], p.warc_ts):
+                out[(d['shape_id'], p.url, p.point_idx)] += 1
+    return out
+
+
+@pytest.mark.parametrize('seed', [10001, 10002, 10003])
+def test_mixed_catalog_join_matches_brute_force(spark, seed):
+    """Seed 10002 has a box whose top edge the Python hash_shape cover
+    misses (shape 0, two matches near lat 40.524); the window cover keeps
+    them."""
+    from geostructures_spark.operators.miner import mine_points
+    from geostructures_spark.operators.spatial_join import spatial_join_points
+    from geostructures_spark.sources.pages import pages_df
+    from geostructures_spark.sources.shapes import shapes_df
+    points = mine_points(pages_df(spark, 20_000, seed=seed)).cache()
+    shapes = shapes_df(spark, 120, seed=seed).cache()
+    joined = spatial_join_points(points, shapes, length=6, time_gated=True)
+    got = Counter((r.shape_id, r.url, r.point_idx) for r in
+                  joined.select('shape_id', 'url', 'point_idx').collect())
+    want = _brute_force(points, shapes, time_gated=True)
+    points.unpersist()
+    shapes.unpersist()
+    assert len(want) > 1000
+    assert got == want
+
+
+PARAMS = ('center_lon', 'center_lat', 'radius', 'semi_major', 'semi_minor',
+          'rotation', 'inner_radius', 'outer_radius', 'angle_min', 'angle_max',
+          'min_lon', 'min_lat', 'max_lon', 'max_lat')
+
+
+def _shape(sid, kind, rings=None, poly_sizes=None, **params):
+    return (sid, kind, tuple(params.get(f) for f in PARAMS), rings,
+            None, None, {}, poly_sizes)
+
+
+def _ring(*pts):
+    return [(float(x), float(y)) for x, y in pts]
+
+
+# every kind, plus shapes touching a pole and next to the antimeridian
+SHAPES = [
+    _shape(1, 'circle', center_lon=10.0, center_lat=45.0, radius=300_000.0),
+    _shape(2, 'ellipse', center_lon=-60.0, center_lat=-20.0, semi_major=400_000.0,
+           semi_minor=150_000.0, rotation=30.0),
+    _shape(3, 'ring', center_lon=100.0, center_lat=30.0, inner_radius=100_000.0,
+           outer_radius=300_000.0, angle_min=0.0, angle_max=360.0),
+    _shape(4, 'ring', center_lon=-120.0, center_lat=50.0, inner_radius=50_000.0,
+           outer_radius=250_000.0, angle_min=30.0, angle_max=120.0),
+    _shape(5, 'box', min_lon=20.0, min_lat=-10.0, max_lon=24.5, max_lat=-6.25),
+    _shape(6, 'polygon', rings=[
+        _ring((0, 0), (4, 0), (4, 3), (0, 3), (0, 0)),
+        _ring((1, 1), (1, 2), (2, 2), (2, 1), (1, 1))]),
+    _shape(7, 'multipolygon', poly_sizes=[2, 1], rings=[
+        _ring((30, 30), (33, 30), (33, 33), (30, 33), (30, 30)),
+        _ring((31, 31), (31, 32), (32, 32), (32, 31), (31, 31)),
+        _ring((40, 35), (42, 35), (41, 37), (40, 35))]),
+    _shape(8, 'linestring', rings=[_ring((-5, 50), (-3, 51.5), (-1, 50.2), (2, 52))]),
+    _shape(9, 'point', center_lon=139.7, center_lat=35.7),
+    _shape(10, 'multilinestring', rings=[_ring((60, 10), (62, 11)),
+                                         _ring((63, 12), (64, 10.5))]),
+    _shape(11, 'multipoint', rings=[_ring((-70, -33)), _ring((-71.5, -34.2))]),
+    _shape(12, 'circle', center_lon=45.0, center_lat=88.5, radius=300_000.0),
+    _shape(13, 'box', min_lon=-20.0, min_lat=86.0, max_lon=20.0, max_lat=90.0),
+    _shape(14, 'polygon', rings=[_ring((-10, -85), (10, -85), (0, -90), (-10, -85))]),
+    _shape(15, 'circle', center_lon=179.5, center_lat=-15.0, radius=200_000.0),
+    _shape(16, 'polygon', rings=[_ring((178, 60), (180, 60), (180, 62), (178, 60))]),
+    _shape(17, 'ellipse', center_lon=-179.8, center_lat=10.0, semi_major=150_000.0,
+           semi_minor=300_000.0, rotation=80.0),
+]
+
+
+def _shapes_df(spark, rows):
+    from geostructures_spark.operators.tiling import SHAPES_SCHEMA_DDL
+    return spark.createDataFrame(rows, SHAPES_SCHEMA_DDL + ', poly_sizes array<int>')
+
+
+@pytest.mark.parametrize('length', [3, 4, 6])
+def test_window_cover_superset_of_python_cover(spark, length):
+    from geostructures_spark.kernels.tiling_niemeyer import cover_shape
+    from geostructures_spark.operators.spatial_join import (
+        _sql_cover_ok_expr, _window_cover, _with_window)
+    from geostructures_spark.operators.tiling import shape_row_to_kernel
+    shapes = _shapes_df(spark, SHAPES)
+    windowed = _with_window(shapes, length).cache()
+    ok = {r.shape_id: r._ok for r in windowed.select('shape_id', '_ok').collect()}
+    # the standalone routing predicate agrees with the operator's window
+    assert ({r.shape_id for r in shapes.filter(_sql_cover_ok_expr(length)).collect()}
+            == {sid for sid, good in ok.items() if good})
+    window = {}
+    for r in _window_cover(windowed.filter('_ok'), length).collect():
+        window.setdefault(r.shape_id, set()).add(r.cell)
+    rows = {r.shape_id: r.asDict(recursive=True) for r in windowed.collect()}
+    windowed.unpersist()
+    # only the full-longitude caps (a pole or the antimeridian inside) at
+    # the finest length exceed the window budget
+    over_cap = {sid for sid, good in ok.items() if not good}
+    assert over_cap == ({12, 15, 17} if length == 6 else set())
+    for sid, row in rows.items():
+        if sid in over_cap:
+            continue
+        python = cover_shape(shape_row_to_kernel(row), length, 16)
+        assert python, sid
+        assert python <= window[sid], (sid, sorted(python - window[sid])[:5])
+
+
+def test_over_cap_window_routes_to_python_cover(spark):
+    """A 20 x 20 degree polygon at length 6 spans ~104k cells, above the
+    window budget: it takes cover_shapes (MapInPandas) through the union,
+    next to a window-covered box, and the join stays exact."""
+    from geostructures_spark.operators.spatial_join import (
+        _catalog_size, spatial_join_points)
+    shapes = _shapes_df(spark, [
+        _shape(1, 'polygon', rings=[_ring((0, 10), (20, 10), (20, 30), (0, 30), (0, 10))]),
+        _shape(2, 'box', min_lon=5.0, min_lat=15.0, max_lon=9.0, max_lat=18.0)])
+    assert _catalog_size(shapes, 6, 16)[3] == 1
+    rng = np.random.default_rng(7)
+    points = spark.createDataFrame(
+        [(f'u{i}', i, float(x), float(y)) for i, (x, y) in
+         enumerate(zip(rng.uniform(-2, 22, 3000), rng.uniform(8, 32, 3000)))],
+        'url string, point_idx int, lon double, lat double')
+    joined = spatial_join_points(points, shapes, length=6, time_gated=False)
+    plan = joined._jdf.queryExecution().executedPlan().toString()
+    assert 'MapInPandas' in plan
+    got = Counter((r.shape_id, r.url, r.point_idx) for r in
+                  joined.select('shape_id', 'url', 'point_idx').collect())
+    want = _brute_force(points, shapes, time_gated=False)
+    assert {sid for sid, _, _ in want} == {1, 2}
+    assert got == want
+
+
+def test_trim_keeps_cell_nearer_than_its_clamped_corner(spark):
+    """At high latitude the point of a cell nearest the circle's center in
+    lon/lat (the clamped center) is not the nearest on the sphere: this
+    cell's west edge passes 283 m closer to the center than the clamped
+    point, which lies outside the circle. The trim's pad keeps the cell."""
+    from geostructures_spark.operators.spatial_join import spatial_join_points
+    shapes = _shapes_df(spark, [
+        _shape(1, 'circle', center_lon=0.0, center_lat=60.0, radius=312_500.0),
+        _shape(2, 'box', min_lon=-50.0, min_lat=-10.0, max_lon=-49.0, max_lat=-9.0)])
+    points = spark.createDataFrame([('u0', 0, 5.625 + 1e-9, 60.1196)],
+                                   'url string, point_idx int, lon double, lat double')
+    joined = spatial_join_points(points, shapes, length=3, time_gated=False)
+    got = Counter((r.shape_id, r.url, r.point_idx) for r in
+                  joined.select('shape_id', 'url', 'point_idx').collect())
+    assert _brute_force(points, shapes, time_gated=False) == Counter({(1, 'u0', 0): 1})
+    assert got == Counter({(1, 'u0', 0): 1})
