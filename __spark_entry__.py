@@ -302,8 +302,8 @@ def _circle_contains_duckdb() -> str:
 
 def _q_spatial_join_circles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """THE spatial join: supplier-centered 500 km circles x customer-derived
-    points through cover_shapes + cell equi-join + exact kernel predicate,
-    rolled up per shape."""
+    points through the JVM window cover + cell-key equi-join + exact
+    haversine predicate, rolled up per shape."""
     from geostructures_spark.operators.spatial_join import spatial_join_points
     _load(spark, sf_dir, 'customer', 'supplier')
     # single-row-group scan -> 2 tasks; the broadcast-probe stage (cell

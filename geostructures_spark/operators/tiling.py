@@ -139,8 +139,8 @@ def cover_shapes(shapes: DataFrame, length: int = 8, base: int = 16,
     The hash_shape cover keeps the cells whose box intersects the shape's
     discretized outline, so it can omit an edge cell that still holds a
     matching point (e.g. cells of the row a box's top edge runs through):
-    it is not a safe candidate filter. The spatial join covers with its
-    JVM window and calls this only for windows over its budget."""
+    it is not a safe candidate filter. The spatial join does not use it:
+    it covers every shape with its JVM window."""
     from geostructures_spark.kernels import tiling_niemeyer as tn
     from geostructures_spark.kernels import h3_cover as hc
     from geostructures_spark.operators.ringio import (

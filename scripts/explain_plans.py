@@ -84,9 +84,10 @@ def main() -> int:
           f'stays JVM with no driver collect')
     ok &= jvm_pred0
 
-    # spec path (catalog beyond broadcast budget, non-circle kinds): no
-    # broadcast of covers; geometry ships through a shape_id equi-join as a
-    # JSON spec column
+    # non-circle catalogs refine through the JSON-spec predicate: beyond
+    # the broadcast budget the spec ships through a shuffled shape_id
+    # equi-join; within it through a broadcast one (never collected)
+    import re
     poly = spark.sql(
         "SELECT CAST(qid AS LONG) AS shape_id, 'polygon' AS kind, "
         'CAST(NULL AS struct<center_lon:double,center_lat:double,radius:double>) AS params, '
@@ -103,20 +104,41 @@ def main() -> int:
     print(f'[{"OK" if spec else "FAIL"}] over-budget polygon catalog ships '
           f'specs through the join (no driver collect)')
     ok &= spec
+    plan = formatted(spatial_join_points(pts, poly, length=4, base=16,
+                                         time_gated=False))
+    spec_bc = ('structstojson' in plan.lower() and re.search(
+        r'BroadcastHashJoin[^\n]*\nLeft keys \[1\]: \[shape_id#\d+L\]\n'
+        r'Right keys \[1\]: \[shape_id#\d+L\]', plan) is not None
+        and re.search(r'BroadcastExchange[^\n]*\nInput \[2\]: '
+                      r'\[shape_id#\d+L, _spec#\d+\]', plan) is not None)
+    print(f'[{"OK" if spec_bc else "FAIL"}] within-budget polygon catalog ships '
+          f'_spec through a broadcast shape_id join')
+    ok &= spec_bc
 
-    # mixed catalog within the window budget: every cover is the JVM window
+    # mixed catalogs: every cover is the JVM window at the shape's level
     # (no Python cover stage) and the join keys on the packed BIGINT cell
-    # index, not a cell string
-    import re
+    # index, not a cell string — within the window budget at length 4,
+    # and with a 20 x 20 degree polygon over it at length 6
     mixed = shapes.drop('properties').unionByName(
         poly.withColumn('shape_id', F.col('shape_id') + 1_000_000))
-    plan = formatted(spatial_join_points(pts, mixed, length=4, base=16,
-                                         time_gated=False))
-    window = ('MapInPandas' not in plan and
-              re.search(r'Left keys \[1\]: \[_ck#\d+L\]', plan) is not None)
-    print(f'[{"OK" if window else "FAIL"}] mixed catalog covers in the JVM '
-          f'window (no MapInPandas) and joins on a bigint key')
-    ok &= window
+    big = poly.limit(1).selectExpr(
+        '-1L AS shape_id', 'kind', 'params',
+        'array(array(named_struct("lon", 0.0e0, "lat", 10.0e0), '
+        'named_struct("lon", 20.0e0, "lat", 10.0e0), '
+        'named_struct("lon", 20.0e0, "lat", 30.0e0), '
+        'named_struct("lon", 0.0e0, "lat", 30.0e0), '
+        'named_struct("lon", 0.0e0, "lat", 10.0e0))) AS rings',
+        'dt_start', 'dt_end')
+    for label, catalog, length in (
+            ('mixed catalog', mixed, 4),
+            ('mixed catalog with an over-budget polygon', mixed.unionByName(big), 6)):
+        plan = formatted(spatial_join_points(pts, catalog, length=length, base=16,
+                                             time_gated=False))
+        window = ('MapInPandas' not in plan and
+                  re.search(r'Left keys \[1\]: \[_ck#\d+L\]', plan) is not None)
+        print(f'[{"OK" if window else "FAIL"}] {label} covers in the JVM '
+              f'window (no MapInPandas) and joins on a bigint key')
+        ok &= window
 
     # bucketed co-located join: repeated joins on the points' cell key scan
     # pre-bucketed storage with NO Exchange on either side

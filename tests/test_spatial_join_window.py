@@ -1,6 +1,7 @@
 """The spatial join's JVM window cover: exact results against brute force on
 mixed catalogs, the window as a superset of the Python ``hash_shape``
-cover for every shape kind, and the over-cap fallback to ``cover_shapes``.
+cover for every shape kind, and the coarser cover level of shapes whose
+window is over the budget at the points' cell length.
 """
 
 from collections import Counter
@@ -44,11 +45,12 @@ def _brute_force(points, shapes, time_gated):
     return out
 
 
-@pytest.mark.parametrize('seed', [10001, 10002, 10003])
+@pytest.mark.parametrize('seed', [10001, 10002, 10003, 10013])
 def test_mixed_catalog_join_matches_brute_force(spark, seed):
     """Seed 10002 has a box whose top edge the Python hash_shape cover
     misses (shape 0, two matches near lat 40.524); the window cover keeps
-    them."""
+    them. Seed 10013 has an antimeridian circle whose full-longitude window
+    is over the budget at length 6: it covers one level coarser."""
     from geostructures_spark.operators.miner import mine_points
     from geostructures_spark.operators.spatial_join import spatial_join_points
     from geostructures_spark.sources.pages import pages_df
@@ -116,8 +118,23 @@ def _shapes_df(spark, rows):
     return spark.createDataFrame(rows, SHAPES_SCHEMA_DDL + ', poly_sizes array<int>')
 
 
+def _cell_key(cell: str, level: int) -> int:
+    """The join key (spatial_join._key_sql) of a base-16 Niemeyer cell's
+    parent ``level`` chars up: de-interleave the MSB-first lon/lat bits,
+    shift both indexes right by 2 bits per level, tag the level."""
+    length, v = len(cell), int(cell, 16)
+    i = j = 0
+    for b in range(2 * length):
+        i = (i << 1) | (v >> (4 * length - 1 - 2 * b)) & 1
+        j = (j << 1) | (v >> (4 * length - 2 - 2 * b)) & 1
+    s = 2 * level
+    return ((i >> s) << 32) | (1 << 2 * (length - level)) | (j >> s)
+
+
 @pytest.mark.parametrize('length', [3, 4, 6])
 def test_window_cover_superset_of_python_cover(spark, length):
+    """Every cell of the Python cover has its parent at the shape's cover
+    level in the window cover, over-budget shapes included."""
     from geostructures_spark.kernels.tiling_niemeyer import cover_shape
     from geostructures_spark.operators.spatial_join import (
         _sql_cover_ok_expr, _window_cover, _with_window)
@@ -125,49 +142,86 @@ def test_window_cover_superset_of_python_cover(spark, length):
     shapes = _shapes_df(spark, SHAPES)
     windowed = _with_window(shapes, length).cache()
     ok = {r.shape_id: r._ok for r in windowed.select('shape_id', '_ok').collect()}
-    # the standalone routing predicate agrees with the operator's window
+    # the standalone predicate agrees with the operator's level-0 window
     assert ({r.shape_id for r in shapes.filter(_sql_cover_ok_expr(length)).collect()}
             == {sid for sid, good in ok.items() if good})
     window = {}
-    for r in _window_cover(windowed.filter('_ok'), length).collect():
+    for r in _window_cover(windowed, length).collect():
         window.setdefault(r.shape_id, set()).add(r.cell)
     rows = {r.shape_id: r.asDict(recursive=True) for r in windowed.collect()}
     windowed.unpersist()
     # only the full-longitude caps (a pole or the antimeridian inside) at
-    # the finest length exceed the window budget
+    # the finest length exceed the window budget; they cover one level up
     over_cap = {sid for sid, good in ok.items() if not good}
     assert over_cap == ({12, 15, 17} if length == 6 else set())
+    assert {sid for sid, row in rows.items() if row['_lvl']} == over_cap
     for sid, row in rows.items():
-        if sid in over_cap:
-            continue
         python = cover_shape(shape_row_to_kernel(row), length, 16)
         assert python, sid
-        assert python <= window[sid], (sid, sorted(python - window[sid])[:5])
+        parents = {_cell_key(c, row['_lvl']) for c in python}
+        assert parents <= window[sid], (sid, len(parents - window[sid]))
 
 
-def test_over_cap_window_routes_to_python_cover(spark):
+def _uniform_points(spark, n, lon, lat, seed=7):
+    rng = np.random.default_rng(seed)
+    return spark.createDataFrame(
+        [(f'u{i}', i, float(x), float(y)) for i, (x, y) in
+         enumerate(zip(rng.uniform(*lon, n), rng.uniform(*lat, n)))],
+        'url string, point_idx int, lon double, lat double')
+
+
+def test_over_budget_window_covers_at_a_coarser_level(spark):
     """A 20 x 20 degree polygon at length 6 spans ~104k cells, above the
-    window budget: it takes cover_shapes (MapInPandas) through the union,
-    next to a window-covered box, and the join stays exact."""
+    window budget: it covers one level up, next to a box at level 0, with
+    no Python cover stage, and the join stays exact."""
     from geostructures_spark.operators.spatial_join import (
         _catalog_size, spatial_join_points)
     shapes = _shapes_df(spark, [
         _shape(1, 'polygon', rings=[_ring((0, 10), (20, 10), (20, 30), (0, 30), (0, 10))]),
         _shape(2, 'box', min_lon=5.0, min_lat=15.0, max_lon=9.0, max_lat=18.0)])
-    assert _catalog_size(shapes, 6, 16)[3] == 1
-    rng = np.random.default_rng(7)
-    points = spark.createDataFrame(
-        [(f'u{i}', i, float(x), float(y)) for i, (x, y) in
-         enumerate(zip(rng.uniform(-2, 22, 3000), rng.uniform(8, 32, 3000)))],
-        'url string, point_idx int, lon double, lat double')
+    assert _catalog_size(shapes, 6)[3] == [0, 1]
+    points = _uniform_points(spark, 3000, (-2, 22), (8, 32))
     joined = spatial_join_points(points, shapes, length=6, time_gated=False)
     plan = joined._jdf.queryExecution().executedPlan().toString()
-    assert 'MapInPandas' in plan
+    assert 'MapInPandas' not in plan
     got = Counter((r.shape_id, r.url, r.point_idx) for r in
                   joined.select('shape_id', 'url', 'point_idx').collect())
     want = _brute_force(points, shapes, time_gated=False)
     assert {sid for sid, _, _ in want} == {1, 2}
     assert got == want
+
+
+def test_level_tag_keeps_coinciding_indexes_apart(spark):
+    """A south-polar circle covers at level 1 (parent indexes i 0..1023,
+    j 0..21 at length 6) next to a box at level 0. Near (-180, -90) a
+    point's fine indexes fall in that same range: untagged, its level-0 key
+    would equal one of the circle's parent keys and the pair would join
+    twice. The level tag keeps each pair to one row."""
+    from geostructures_spark.operators.spatial_join import (
+        _catalog_size, spatial_join_points)
+    shapes = _shapes_df(spark, [
+        _shape(1, 'circle', center_lon=0.0, center_lat=-89.0, radius=300_000.0),
+        _shape(2, 'box', min_lon=-170.0, min_lat=-89.5, max_lon=-160.0, max_lat=-89.0)])
+    assert _catalog_size(shapes, 6)[3] == [0, 1]
+    points = _uniform_points(spark, 3000, (-180, -90), (-90, -88.5))
+    joined = spatial_join_points(points, shapes, length=6, time_gated=False)
+    got = Counter((r.shape_id, r.url, r.point_idx) for r in
+                  joined.select('shape_id', 'url', 'point_idx').collect())
+    want = _brute_force(points, shapes, time_gated=False)
+    assert {sid for sid, _, _ in want} == {1, 2}
+    assert got == want
+
+
+@pytest.mark.parametrize('kwargs, match', [({'length': 6, 'base': 32}, 'base 16'),
+                                           ({'length': 16}, 'length 1..15')])
+def test_unsupported_cell_grid_raises(spark, kwargs, match):
+    """Only base-16 cells join, and only up to length 15: the level tag
+    needs a free bit above the top bit of the packed key's low word."""
+    from geostructures_spark.operators.spatial_join import spatial_join_points
+    shapes = _shapes_df(spark, SHAPES[:1])
+    points = _uniform_points(spark, 10, (0, 1), (0, 1))
+    with pytest.raises(ValueError, match=match):
+        spatial_join_points(points, shapes, **kwargs)
 
 
 def test_trim_keeps_cell_nearer_than_its_clamped_corner(spark):
