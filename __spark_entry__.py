@@ -26,10 +26,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from geostructures_spark.plans import bpe_sql as _bpe_sql
-from geostructures_spark.plans import lm_sql as _lm_sql
-from geostructures_spark.plans import bm25_sql as _bm25_sql
-from geostructures_spark.plans import pq_sql as _pq_sql
+from oracles import bm25_sql as _bm25_sql
+from oracles import bpe_sql as _bpe_sql
+from oracles import lm_sql as _lm_sql
+from oracles import pq_sql as _pq_sql
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -216,6 +216,16 @@ _EVENTS_WINDOW_SQL_SPARK = """
   ORDER BY 1, 2
 """
 _EVENTS_WINDOW_SQL_DUCK = _EVENTS_WINDOW_TEMPLATE.format(epoch_us='epoch_us(ts)')
+
+
+def _niemeyer_cells_duckdb() -> str:
+    # the driver hashes oracle texts whitespace included: keep the indent
+    return f"""
+          WITH pts AS ({_pts_customer_sql()})
+          SELECT {_niemeyer6_duckdb('lon', 'lat')} AS cell,
+                 CAST(COUNT(*) AS BIGINT) AS n
+          FROM pts GROUP BY 1 ORDER BY cell
+        """
 
 
 def _q_niemeyer_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1311,7 +1321,7 @@ def _q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     come from the hits, and ranking uses the 6dp-rounded score with
     doc-id tie-break (so grouped-float-sum ulp noise cannot split a tie
     differently per engine). Oracle: full SQL replay with
-    repr-exact double constants (plans/bm25_sql.py)."""
+    repr-exact double constants (oracles/bm25_sql.py)."""
     from geostructures_spark.operators.bm25 import bm25_topk
     _load(spark, sf_dir, 'documents')
     out = bm25_topk(spark.table('documents'), _BM25_QUERIES, k=10)
@@ -1574,12 +1584,12 @@ FROM kept GROUP BY shape_id ORDER BY shape_id
 
 def _h3_cells_duckdb() -> str:
     """Value-exact H3 oracle: the full latlng->cell pipeline replayed in
-    DuckDB SQL (plans/h3_sql.py — face argmin, gnomonic hex grid, IJK
+    DuckDB SQL (oracles/h3_sql.py — face argmin, gnomonic hex grid, IJK
     rounding, aperture-7 walk, base-cell/rotation tables incl. the
     pentagon path). Verified 0 mismatches vs the kernel on 56k
     point-resolution pairs; the kernel itself is golden-verified against
     the h3 C library in tests/test_kernels_h3.py."""
-    from geostructures_spark.plans.h3_sql import latlng_to_cell_sql
+    from oracles.h3_sql import latlng_to_cell_sql
     inner = latlng_to_cell_sql(_pts_customer_sql(), 7)
     return (f"SELECT cell, CAST(COUNT(*) AS BIGINT) AS n FROM ({inner}) "
             f"GROUP BY cell ORDER BY cell")
@@ -1603,21 +1613,21 @@ def _q_h3_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _h3_cover_duckdb() -> str:
-    from geostructures_spark.plans.h3_sql import circle_cover_counts_sql
+    from oracles.h3_sql import circle_cover_counts_sql
     return circle_cover_counts_sql(
         f'SELECT qid AS shape_id, q_lon, q_lat FROM ({_pts_supplier_sql()})',
         5, 100_000.0)
 
 
 def _h3_compact_duckdb() -> str:
-    from geostructures_spark.plans.h3_sql import compact_roundtrip_sql
+    from oracles.h3_sql import compact_roundtrip_sql
     return compact_roundtrip_sql(
         f'SELECT qid AS shape_id, q_lon, q_lat FROM ({_pts_supplier_sql()}) '
         f'WHERE qid <= 40', 5, 150_000.0)
 
 
 def _s2_cells_duckdb() -> str:
-    from geostructures_spark.plans.s2_sql import s2_latlng_to_token_sql
+    from oracles.s2_sql import s2_latlng_to_token_sql
     inner = s2_latlng_to_token_sql(_pts_customer_sql(), 12)
     return (f"SELECT cell, CAST(COUNT(*) AS BIGINT) AS n FROM ({inner}) "
             f"GROUP BY cell ORDER BY cell")
@@ -1627,7 +1637,7 @@ def _q_s2_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S2 tiling (the north rule's second index family): customer points
     -> level-12 S2 cell tokens (from-scratch cube-face + quadratic-st +
     Hilbert-curve kernel, kernels/s2.py) -> counts per cell. Value-exact
-    DuckDB oracle: full SQL replay of the transform (plans/s2_sql.py)."""
+    DuckDB oracle: full SQL replay of the transform (oracles/s2_sql.py)."""
     from geostructures_spark.operators.tiling import with_cell
     _load(spark, sf_dir, 'customer')
     # spread the CPU-bound S2 kernel over every core (see _q_h3_cells)
@@ -1641,7 +1651,7 @@ def _q_s2_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_h3_cover_circle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """H3 shape covers (H3Hasher.hash_shape polyfill semantics): supplier
     100km circles -> res-5 cover cell counts per shape. Value-exact
-    DuckDB oracle: full SQL replay of the polyfill (plans/h3_sql.py —
+    DuckDB oracle: full SQL replay of the polyfill (oracles/h3_sql.py —
     forward transform over a polar candidate grid at res-1, child
     expansion, inverse transform for centers, even-odd PIP keep test)."""
     from geostructures_spark.operators.tiling import cover_shapes
@@ -1660,7 +1670,7 @@ def _q_h3_cover_circle(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _s2_cover_duckdb() -> str:
-    from geostructures_spark.plans.s2_sql import s2_circle_cover_counts_sql
+    from oracles.s2_sql import s2_circle_cover_counts_sql
     return s2_circle_cover_counts_sql(
         f'SELECT qid AS shape_id, q_lon, q_lat FROM ({_pts_supplier_sql()})',
         9, 100_000.0)
@@ -1670,7 +1680,7 @@ def _q_s2_cover_circle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S2 shape covers: supplier 100km circles -> level-9 polyfill cell
     counts per shape (centroid-containment, same keep rule as the H3
     cover — kernels/s2.py polygon_to_cells_s2). Value-exact DuckDB
-    oracle: full SQL replay (plans/s2_sql.py)."""
+    oracle: full SQL replay (oracles/s2_sql.py)."""
     from geostructures_spark.operators.tiling import cover_shapes
     _load(spark, sf_dir, 'supplier')
     sup = spark.sql(_pts_supplier_sql())
@@ -1691,7 +1701,7 @@ def _q_h3_compact_cover(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics, kernels/h3_core.py hierarchy ops): res-6 circle covers are
     losslessly compacted per shape; the query certifies the round trip by
     recomputing the full cover from the compacted one. Value-exact DuckDB
-    oracle: SQL replay of cover + compact + uncompact (plans/h3_sql.py
+    oracle: SQL replay of cover + compact + uncompact (oracles/h3_sql.py
     compact_roundtrip_sql), so the hierarchy ops are derived
     independently, not assumed."""
     from geostructures_spark.operators.tiling import (
@@ -5517,7 +5527,7 @@ _BPE_MERGES = 6
 def _q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed BPE training (operators/bpe.py): learn 8 merges over
     the documents word vocabulary (Sennrich-style, '</w>' end-of-word
-    marker). The oracle (plans/bpe_sql.py) unrolls all 8 rounds into SQL
+    marker). The oracle (oracles/bpe_sql.py) unrolls all 8 rounds into SQL
     — pair counts, argmax rule, and the greedy-leftmost gaps-and-islands
     merge application are re-derived independently by DuckDB."""
     from geostructures_spark.operators.bpe import bpe_train, word_vocab
@@ -5811,7 +5821,7 @@ def _q_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization encode (operators/pq.py): per-subspace L2
     codebooks (Lloyd, GEMM assignment, all subspaces per pass), then a
     ZERO-shuffle mapInPandas encode of every vector to its m-code
-    array. Oracle (plans/pq_sql.py) unrolls training + encoding with
+    array. Oracle (oracles/pq_sql.py) unrolls training + encoding with
     list_distance argmin and code-id tie-breaks."""
     from geostructures_spark.operators.pq import pq_encode
     vecs, books = _pq_books(spark, sf_dir)
@@ -5871,7 +5881,7 @@ def _q_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stupid-backoff n-gram LM quality scores (operators/lm.py): train
     unigram/bigram counts on the corpus, score every document's
     log-score + perplexity through broadcast joins (no corpus shuffle
-    except the final per-doc agg). Oracle (plans/lm_sql.py) re-derives
+    except the final per-doc agg). Oracle (oracles/lm_sql.py) re-derives
     the counts AND the scores from the raw table in DuckDB."""
     from geostructures_spark.operators.lm import (doc_tokens, lm_counts,
                                                   score_docs)
@@ -5885,7 +5895,11 @@ def _q_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy('doc_id'))
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+_Query = Callable[[SparkSession, str], DataFrame]
+
+
+def _registry() -> list[tuple[str, _Query, str | None]]:
+    """(name, query, DuckDB oracle SQL or None) for every driver query."""
     # ORDER MATTERS: the round driver certifies exactly the FIRST 50
     # entries (CORRECTNESS_r{N}.json == registry[0:50]). Round-5
     # rotation (r4-verdict task 1 + ADVICE item 3): the window =
@@ -5899,277 +5913,148 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # startup + Arrow-worker warmup land on light rows, keeping the
     # heavy rows (bpe/*, streaming_*) inside their warm-path
     # timings. The back half is all driver-green (r3/r4), unchanged.
-    return {
-        'weighted_sample_docs': _q_weighted_sample,  # ~0.3s
-        'nchars_percentiles': _q_nchars_percentiles,  # ~0.3s
-        'niemeyer_cell_counts': _q_niemeyer_cells,  # ~0.5s
-        'asof_join_events': _q_asof_join,  # ~0.6s
-        's2_cell_counts': _q_s2_cells,  # ~0.6s
-        'q1_pricing_summary': _q1_pricing_summary,  # ~0.6s
-        'exact_dedup_groups': _q_exact_dedup,  # ~0.6s
-        'pip_triangle_counts': _q_pip_triangle,  # ~0.6s
-        'knn_topk': _q_knn,  # ~0.8s
-        'cosine_topk': _q_cosine_topk,  # ~0.8s
-        'circle_contains_counts': _q_circle_contains,  # ~0.9s
-        'pages_mine_cells': _q_pages_mine,  # ~1.0s
-        'minhash_lsh_pairs': _q_minhash_pairs,  # ~1.0s
-        'h3_cell_counts': _q_h3_cells,  # ~1.0s
-        'tfidf_top_terms': _q_tfidf_terms,  # ~1.1s
-        'track_speed_stats': _q_track_speeds,  # ~1.1s
-        'bloom_membership': _q_bloom,  # ~1.2s
-        'linear_count_tokens': _q_linear_count,  # ~1.3s
-        'ivf_ann_topk': _q_ivf_ann,  # ~1.3s
-        'ngram_novelty_docs': _q_ngram_novelty,  # ~1.4s
-        'minhash_cross_pairs': _q_minhash_cross,  # ~1.5s
-        's2_cover_circle': _q_s2_cover_circle,  # ~1.7s
-        'spatial_join_circles': _q_spatial_join_circles,  # ~1.7s
-        'cms_token_counts': _q_cms_counts,  # ~1.8s
-        'streaming_minhash_dedup': _q_streaming_minhash,  # ~2.2s
-        'simplify_track_radial': _q_simplify_radial,  # ~2.3s
-        'neardup_components': _q_neardup_components,  # ~2.3s
-        'streaming_cell_counts': _q_streaming_cells,  # ~2.4s
-        'bm25_topk': _q_bm25,  # ~2.5s
-        'hybrid_rrf_topk': _q_hybrid_rrf,  # ~2.5s
-        'resample_track_slerp': _q_resample_slerp,  # ~2.5s
-        'shape_join_intersects': _q_shape_join,  # ~2.7s
-        'niemeyer_cover_circle': _q_niemeyer_cover_circle,  # ~2.8s
-        'c4_filter_docs': _q_c4_filter,  # ~2.9s
-        'knn_auto_topk': _q_knn_auto,  # ~2.9s
-        'ivfpq_ann_topk': _q_ivfpq,  # ~3.2s
-        'zonal_stats_circles': _q_zonal_stats,  # ~3.4s
-        'resample_track_grid': _q_resample_track,  # ~3.5s
-        'streaming_cms_sketch': _q_streaming_cms,  # ~3.7s
-        'embedding_neardup_pairs': _q_embedding_neardup,  # ~4.6s
-        'exactsubstr_spans': _q_exactsubstr,  # ~4.7s
-        'pq_adc_topk': _q_pq_adc,  # ~5.4s
-        'lm_score_docs': _q_lm_score,  # ~5.6s
-        'h3_compact_cover': _q_h3_compact_cover,  # ~5.6s
-        'h3_cover_circle': _q_h3_cover_circle,  # ~5.9s
-        'span_dedup_docs': _q_span_dedup,  # ~6.2s
-        'semantic_dedup_keep': _q_semantic_dedup,  # ~7.0s
-        'pq_encode_codes': _q_pq_encode,  # ~8.3s
-        'bpe_encode_tokens': _q_bpe_encode,  # ~18.4s
-        'bpe_train_merges': _q_bpe_train,  # ~31.4s
+    return [
+        ('weighted_sample_docs', _q_weighted_sample, _WEIGHTED_SAMPLE_DUCK),  # ~0.3s
+        ('nchars_percentiles', _q_nchars_percentiles, _PERCENTILES_DUCK),  # ~0.3s
+        ('niemeyer_cell_counts', _q_niemeyer_cells, _niemeyer_cells_duckdb()),  # ~0.5s
+        ('asof_join_events', _q_asof_join, _ASOF_DUCK),  # ~0.6s
+        ('s2_cell_counts', _q_s2_cells, _s2_cells_duckdb()),  # ~0.6s
+        ('q1_pricing_summary', _q1_pricing_summary, _Q1_SQL),  # ~0.6s
+        ('exact_dedup_groups', _q_exact_dedup, _EXACT_DEDUP_DUCK),  # ~0.6s
+        ('pip_triangle_counts', _q_pip_triangle, _pip_triangle_duckdb()),  # ~0.6s
+        ('knn_topk', _q_knn, _knn_duckdb()),  # ~0.8s
+        ('cosine_topk', _q_cosine_topk, _COSINE_DUCK),  # ~0.8s
+        ('circle_contains_counts', _q_circle_contains, _circle_contains_duckdb()),  # ~0.9s
+        ('pages_mine_cells', _q_pages_mine, _pages_mine_duckdb()),  # ~1.0s
+        ('minhash_lsh_pairs', _q_minhash_pairs, _MINHASH_DUCK),  # ~1.0s
+        ('h3_cell_counts', _q_h3_cells, _h3_cells_duckdb()),  # ~1.0s
+        ('tfidf_top_terms', _q_tfidf_terms, _TFIDF_DUCK),  # ~1.1s
+        ('track_speed_stats', _q_track_speeds, _track_speeds_duckdb()),  # ~1.1s
+        ('bloom_membership', _q_bloom, _BLOOM_DUCK),  # ~1.2s
+        ('linear_count_tokens', _q_linear_count, _LINEAR_COUNT_DUCK),  # ~1.3s
+        ('ivf_ann_topk', _q_ivf_ann, _IVF_ANN_DUCK),  # ~1.3s
+        ('ngram_novelty_docs', _q_ngram_novelty, _NGRAM_NOVELTY_DUCK),  # ~1.4s
+        ('minhash_cross_pairs', _q_minhash_cross, _MINHASH_CROSS_DUCK),  # ~1.5s
+        ('s2_cover_circle', _q_s2_cover_circle, _s2_cover_duckdb()),  # ~1.7s
+        ('spatial_join_circles', _q_spatial_join_circles, _spatial_join_circles_duckdb()),  # ~1.7s
+        ('cms_token_counts', _q_cms_counts, _CMS_DUCK),  # ~1.8s
+        ('streaming_minhash_dedup', _q_streaming_minhash, _STREAMING_MINHASH_DUCK),  # ~2.2s
+        ('simplify_track_radial', _q_simplify_radial, _simplify_radial_duckdb()),  # ~2.3s
+        ('neardup_components', _q_neardup_components, _NEARDUP_COMPONENTS_DUCK),  # ~2.3s
+        ('streaming_cell_counts', _q_streaming_cells, _streaming_cells_duckdb()),  # ~2.4s
+        ('bm25_topk', _q_bm25, _bm25_sql.bm25_topk_duckdb(_BM25_QUERIES, k=10)),  # ~2.5s
+        ('hybrid_rrf_topk', _q_hybrid_rrf,
+         _bm25_sql.hybrid_rrf_duckdb(_BM25_QUERIES, k=10)),  # ~2.5s
+        ('resample_track_slerp', _q_resample_slerp, _resample_duckdb('slerp')),  # ~2.5s
+        ('shape_join_intersects', _q_shape_join, _shape_join_duckdb()),  # ~2.7s
+        ('niemeyer_cover_circle', _q_niemeyer_cover_circle, _niemeyer_cover_duckdb()),  # ~2.8s
+        ('c4_filter_docs', _q_c4_filter, _C4_FILTER_DUCK),  # ~2.9s
+        ('knn_auto_topk', _q_knn_auto, _knn_duckdb()),  # ~2.9s
+        ('ivfpq_ann_topk', _q_ivfpq, _pq_sql.ivfpq_topk_duckdb()),  # ~3.2s
+        ('zonal_stats_circles', _q_zonal_stats, _ZONAL_DUCK),  # ~3.4s
+        ('resample_track_grid', _q_resample_track, _resample_duckdb()),  # ~3.5s
+        ('streaming_cms_sketch', _q_streaming_cms, _STREAMING_CMS_DUCK),  # ~3.7s
+        ('embedding_neardup_pairs', _q_embedding_neardup, _EMB_NEARDUP_DUCK),  # ~4.6s
+        ('exactsubstr_spans', _q_exactsubstr, _EXACTSUBSTR_DUCK),  # ~4.7s
+        ('pq_adc_topk', _q_pq_adc, _pq_sql.pq_adc_duckdb()),  # ~5.4s
+        ('lm_score_docs', _q_lm_score, _lm_sql.lm_score_duckdb()),  # ~5.6s
+        ('h3_compact_cover', _q_h3_compact_cover, _h3_compact_duckdb()),  # ~5.6s
+        ('h3_cover_circle', _q_h3_cover_circle, _h3_cover_duckdb()),  # ~5.9s
+        ('span_dedup_docs', _q_span_dedup, _SPAN_DEDUP_DUCK),  # ~6.2s
+        ('semantic_dedup_keep', _q_semantic_dedup, _SEMDEDUP_DUCK),  # ~7.0s
+        ('pq_encode_codes', _q_pq_encode, _pq_sql.pq_encode_duckdb()),  # ~8.3s
+        ('bpe_encode_tokens', _q_bpe_encode, _bpe_sql.bpe_encode_duckdb(_BPE_MERGES)),  # ~18.4s
+        ('bpe_train_merges', _q_bpe_train, _bpe_sql.bpe_train_duckdb(_BPE_MERGES)),  # ~31.4s
         # ---- registry[50:] - driver-certified green in r3/r4, settled ----
-        'simhash_buckets': _q_simhash,
-        'media_features_stub': _q_media_features,
-        'ellipse_covariance_roundtrip': _q_ellipse_covariance,
-        'split_by_length_chunks': _q_split_by_length,
-        'shape_dedup_groups': _q_shape_dedup,
-        'wkt_serialize_roundtrip': _q_wkt_serialize,
-        'geojson_serialize_roundtrip': _q_geojson_serialize,
-        'vincenty_distance_pairs': _q_vincenty,
-        'karney_meridian_arc': _q_karney,
-        'web_mercator_roundtrip': _q_web_mercator,
-        'xyz_tile_quadkeys': _q_xyz_tiles,
-        'knn_pruned_topk': _q_knn_pruned,
-        'time_of_day_counts': _q_time_of_day,
-        'ivf_kmeans_train': _q_kmeans_ivf,
-        'streaming_sessionize': _q_streaming_sessions,
-        'rotate_coordinates': _q_rotate,
-        'circle_bounding_coords': _q_circle_discretize,
-        'ellipse_bounding_coords': _q_ellipse_discretize,
-        'ring_wedge_coords': _q_ring_wedge_discretize,
-        'polygon_centroid': _q_polygon_centroid,
-        'kml_parse_roundtrip': _q_kml_roundtrip,
-        'utm_project': _q_utm_project,
-        'tm_custom_project': _q_tm_custom,
-        'mgrs_encode_strings': _q_mgrs_encode,
-        'shapefile_roundtrip': _q_shapefile_roundtrip,
-        'dms_convert': _q_dms_convert,
-        'osgb_project': _q_osgb_project,
-        'gk_pulkovo_project': _q_gk_pulkovo_project,
-        'lcc_project': _q_lcc_project,
-        'albers_project': _q_albers_project,
-        'hash_sample_docs': _q_hash_sample,
-        'stratified_sample_docs': _q_stratified_sample,
-        'per_source_cap': _q_per_source_cap,
-        'streaming_exact_dedup': _q_streaming_dedup,
-        'repetition_stats': _q_repetition_stats,
-        'mixture_sample_epochs': _q_mixture_sample,
-        'url_normalize_dedup': _q_url_dedup,
-        'pack_sequences_docs': _q_pack_sequences,
-        'assign_split_groups': _q_assign_split,
-        'host_stats_crawl': _q_host_stats,
-        'quality_gate_mask': _q_quality_gate,
-        'streaming_url_dedup': _q_streaming_url_dedup,
-        'line_dedup_docs': _q_line_dedup,
-        'decontaminate_ngrams': _q_decontaminate,
-        'ivf_assign_counts': _q_ivf_counts,
-        'events_windowed_agg': _q_events_windowed,
-        'streaming_events_windowed': _q_streaming_events,
-        'impossible_journeys': _q_impossible_journeys,
-        'q3_top_revenue': _q3_top_revenue,
-        'interval_intersects_counts': _q_interval_intersects,
-        'interval_set_ops': _q_interval_set_ops,
-        'collection_bounds': _q_bounds,
-        'convolve_duplicate_timestamps': _q_convolve_dups,
-        'streaming_impossible_journeys': _q_streaming_impossible,
-        'text_stats': _q_text_stats,
-        'token_counts': _q_token_counts,
-        'scrub_pii': _q_scrub_pii,
-        'lang_id_agreement': _q_lang_markers,
-        'wkb_roundtrip': _q_wkb_roundtrip,
-        'geojson_featurecollection': _q_geojson_fc,
-        'split_multishapes': _q_split_multishapes,
-        'raster_tile_assignment': _q_raster_tiles,
-        'wkt_parse_roundtrip': _q_wkt_parse,
-        'geojson_parse': _q_geojson_parse,
-        'filter_by_property': _q_filter_by_property,
-        'convex_hull_by_segment': _q_convex_hull,
-        'quality_score_buckets': _q_quality_score,
-        'doc_fingerprints': _q_fingerprint,
-        'ngram_jaccard_pairs': _q_ngram_jaccard,
-        'shape_derived_bounds': _q_shape_bounds,
-        'shape_volume': _q_shape_volume,
-        'unit_conversions': _q_unit_conversions,
-        'track_extremes': _q_track_extremes,
-        'media_real_decode': _q_media_real_decode,
+        ('simhash_buckets', _q_simhash, _simhash_duckdb()),
+        ('media_features_stub', _q_media_features, None),  # decode stub, plumbing-only
+        ('ellipse_covariance_roundtrip', _q_ellipse_covariance, _ELLIPSE_COV_DUCK),
+        ('split_by_length_chunks', _q_split_by_length, _split_by_length_duckdb()),
+        ('shape_dedup_groups', _q_shape_dedup, _SHAPE_DEDUP_DUCK),
+        ('wkt_serialize_roundtrip', _q_wkt_serialize, _WKT_SERIALIZE_DUCK),
+        ('geojson_serialize_roundtrip', _q_geojson_serialize, _GEOJSON_SERIALIZE_DUCK),
+        ('vincenty_distance_pairs', _q_vincenty, _vincenty_duckdb()),
+        ('karney_meridian_arc', _q_karney, _karney_meridian_duckdb()),
+        ('web_mercator_roundtrip', _q_web_mercator,
+         _WEB_MERCATOR_DUCK.format(pts=_pts_customer_sql())),
+        ('xyz_tile_quadkeys', _q_xyz_tiles, _XYZ_TILES_DUCK.format(pts=_pts_customer_sql())),
+        ('knn_pruned_topk', _q_knn_pruned, _knn_duckdb()),
+        ('time_of_day_counts', _q_time_of_day, _TIME_OF_DAY_DUCK),
+        ('ivf_kmeans_train', _q_kmeans_ivf, _kmeans_duckdb(n_iter=1)),
+        ('streaming_sessionize', _q_streaming_sessions, _SESSIONS_DUCK),
+        ('rotate_coordinates', _q_rotate, _ROTATE_DUCK),
+        ('circle_bounding_coords', _q_circle_discretize, _circle_discretize_duckdb()),
+        ('ellipse_bounding_coords', _q_ellipse_discretize, _ellipse_discretize_duckdb()),
+        ('ring_wedge_coords', _q_ring_wedge_discretize, _ring_wedge_discretize_duckdb()),
+        ('polygon_centroid', _q_polygon_centroid, _polygon_centroid_duckdb()),
+        ('kml_parse_roundtrip', _q_kml_roundtrip, _KML_ROUNDTRIP_DUCK),
+        ('utm_project', _q_utm_project, _utm_project_duckdb()),
+        ('tm_custom_project', _q_tm_custom, _tm_custom_duckdb()),
+        ('mgrs_encode_strings', _q_mgrs_encode, _mgrs_encode_duckdb()),
+        ('shapefile_roundtrip', _q_shapefile_roundtrip, _SHAPEFILE_ROUNDTRIP_DUCK),
+        ('dms_convert', _q_dms_convert, _dms_duckdb()),
+        ('osgb_project', _q_osgb_project, _osgb_project_duckdb()),
+        ('gk_pulkovo_project', _q_gk_pulkovo_project, _gk_pulkovo_project_duckdb()),
+        ('lcc_project', _q_lcc_project, _lcc_project_duckdb()),
+        ('albers_project', _q_albers_project, _albers_project_duckdb()),
+        ('hash_sample_docs', _q_hash_sample, _hash_sample_duckdb()),
+        ('stratified_sample_docs', _q_stratified_sample, _stratified_sample_duckdb()),
+        ('per_source_cap', _q_per_source_cap, _per_source_cap_duckdb()),
+        ('streaming_exact_dedup', _q_streaming_dedup, _STREAMING_DEDUP_DUCK),
+        ('repetition_stats', _q_repetition_stats, _repetition_stats_duckdb()),
+        ('mixture_sample_epochs', _q_mixture_sample, _mixture_sample_duckdb()),
+        ('url_normalize_dedup', _q_url_dedup, _URL_DEDUP_DUCK),
+        ('pack_sequences_docs', _q_pack_sequences, _PACK_SEQUENCES_DUCK),
+        ('assign_split_groups', _q_assign_split, _assign_split_duckdb()),
+        ('host_stats_crawl', _q_host_stats, _host_stats_duckdb()),
+        ('quality_gate_mask', _q_quality_gate, _quality_gate_duckdb()),
+        ('streaming_url_dedup', _q_streaming_url_dedup, _streaming_url_dedup_duckdb()),
+        ('line_dedup_docs', _q_line_dedup, _LINE_DEDUP_DUCK),
+        ('decontaminate_ngrams', _q_decontaminate, _DECONTAM_DUCK),
+        ('ivf_assign_counts', _q_ivf_counts, _IVF_DUCK),
+        ('events_windowed_agg', _q_events_windowed, _EVENTS_WINDOW_SQL_DUCK),
+        ('streaming_events_windowed', _q_streaming_events, _STREAMING_DUCK),
+        ('impossible_journeys', _q_impossible_journeys, _impossible_duckdb()),
+        ('q3_top_revenue', _q3_top_revenue, _Q3_SQL),
+        ('interval_intersects_counts', _q_interval_intersects, _INTERVAL_DUCK),
+        ('interval_set_ops', _q_interval_set_ops, _INTERVAL_SETOPS_DUCK),
+        ('collection_bounds', _q_bounds, _BOUNDS_SQL),
+        ('convolve_duplicate_timestamps', _q_convolve_dups, _CONVOLVE_DUCK),
+        ('streaming_impossible_journeys', _q_streaming_impossible, _impossible_duckdb()),
+        ('text_stats', _q_text_stats, _TEXT_STATS_DUCK),
+        ('token_counts', _q_token_counts, _TOKEN_COUNTS_DUCK),
+        ('scrub_pii', _q_scrub_pii, _scrub_pii_duckdb()),
+        ('lang_id_agreement', _q_lang_markers, _lang_markers_duckdb()),
+        ('wkb_roundtrip', _q_wkb_roundtrip, _WKB_ROUNDTRIP_DUCK),
+        ('geojson_featurecollection', _q_geojson_fc, _GEOJSON_FC_DUCK),
+        ('split_multishapes', _q_split_multishapes, _SPLIT_MULTI_DUCK),
+        ('raster_tile_assignment', _q_raster_tiles, _RASTER_TILES_DUCK),
+        ('wkt_parse_roundtrip', _q_wkt_parse, _WKT_PARSE_DUCK),
+        ('geojson_parse', _q_geojson_parse, _GEOJSON_PARSE_DUCK),
+        ('filter_by_property', _q_filter_by_property, _FILTER_PROP_DUCK),
+        ('convex_hull_by_segment', _q_convex_hull, _CONVEX_HULL_DUCK),
+        ('quality_score_buckets', _q_quality_score, _QUALITY_DUCK),
+        ('doc_fingerprints', _q_fingerprint, _FINGERPRINT_DUCK),
+        ('ngram_jaccard_pairs', _q_ngram_jaccard, _JACCARD_DUCK),
+        ('shape_derived_bounds', _q_shape_bounds, _SHAPE_BOUNDS_DUCK),
+        ('shape_volume', _q_shape_volume, _SHAPE_VOLUME_DUCK),
+        ('unit_conversions', _q_unit_conversions, _UNIT_CONV_DUCK),
+        ('track_extremes', _q_track_extremes, _TRACK_EXTREMES_DUCK),
+        ('media_real_decode', _q_media_real_decode,
+         _MEDIA_REAL_DUCK.format(pts=_pts_customer_sql())),
         # -- new in r5, back half (judge-sweep oracle row; not in the
         # -- certified window this round) --
-        'hll_count_tokens': _q_hll_tokens,
-        'ann_recall_ivf': _q_ann_recall,
-        'streaming_hll_sketch': _q_streaming_hll,
-        'dsir_logweights': _q_dsir_weights,
-        'dsir_select_topk': _q_dsir_topk,
-    }
+        ('hll_count_tokens', _q_hll_tokens, _HLL_DUCK),
+        ('ann_recall_ivf', _q_ann_recall, _ANN_RECALL_DUCK),
+        ('streaming_hll_sketch', _q_streaming_hll, _HLL_DUCK),
+        ('dsir_logweights', _q_dsir_weights, _DSIR_DUCK),
+        ('dsir_select_topk', _q_dsir_topk, _dsir_topk_duckdb()),
+    ]
+
+
+def queries() -> dict[str, _Query]:
+    return {name: fn for name, fn, _ in _registry()}
 
 
 def oracle_sql() -> dict[str, str]:
-    pts = _pts_customer_sql()
-    return {
-        'q1_pricing_summary': _Q1_SQL,
-        'q3_top_revenue': _Q3_SQL,
-        'events_windowed_agg': _EVENTS_WINDOW_SQL_DUCK,
-        'niemeyer_cell_counts': f"""
-          WITH pts AS ({pts})
-          SELECT {_niemeyer6_duckdb('lon', 'lat')} AS cell,
-                 CAST(COUNT(*) AS BIGINT) AS n
-          FROM pts GROUP BY 1 ORDER BY cell
-        """,
-        'pip_triangle_counts': _pip_triangle_duckdb(),
-        'circle_contains_counts': _circle_contains_duckdb(),
-        'spatial_join_circles': _spatial_join_circles_duckdb(),
-        'knn_topk': _knn_duckdb(),
-        'knn_auto_topk': _knn_duckdb(),
-        'track_speed_stats': _track_speeds_duckdb(),
-        'interval_intersects_counts': _INTERVAL_DUCK,
-        'interval_set_ops': _INTERVAL_SETOPS_DUCK,
-        'collection_bounds': _BOUNDS_SQL,
-        'convolve_duplicate_timestamps': _CONVOLVE_DUCK,
-        'impossible_journeys': _impossible_duckdb(),
-        'streaming_impossible_journeys': _impossible_duckdb(),
-        'exact_dedup_groups': _EXACT_DEDUP_DUCK,
-        'minhash_lsh_pairs': _MINHASH_DUCK,
-        'line_dedup_docs': _LINE_DEDUP_DUCK,
-        'decontaminate_ngrams': _DECONTAM_DUCK,
-        'asof_join_events': _ASOF_DUCK,
-        'text_stats': _TEXT_STATS_DUCK,
-        'token_counts': _TOKEN_COUNTS_DUCK,
-        'scrub_pii': _scrub_pii_duckdb(),
-        'lang_id_agreement': _lang_markers_duckdb(),
-        'cosine_topk': _COSINE_DUCK,
-        'ivf_assign_counts': _IVF_DUCK,
-        'embedding_neardup_pairs': _EMB_NEARDUP_DUCK,
-        'streaming_events_windowed': _STREAMING_DUCK,
-        'niemeyer_cover_circle': _niemeyer_cover_duckdb(),
-        'h3_cell_counts': _h3_cells_duckdb(),
-        's2_cell_counts': _s2_cells_duckdb(),
-        'h3_cover_circle': _h3_cover_duckdb(),
-        's2_cover_circle': _s2_cover_duckdb(),
-        'h3_compact_cover': _h3_compact_duckdb(),
-        'wkt_parse_roundtrip': _WKT_PARSE_DUCK,
-        'geojson_parse': _GEOJSON_PARSE_DUCK,
-        'shape_join_intersects': _shape_join_duckdb(),
-        'filter_by_property': _FILTER_PROP_DUCK,
-        'convex_hull_by_segment': _CONVEX_HULL_DUCK,
-        'quality_score_buckets': _QUALITY_DUCK,
-        'doc_fingerprints': _FINGERPRINT_DUCK,
-        'ngram_jaccard_pairs': _JACCARD_DUCK,
-        'neardup_components': _NEARDUP_COMPONENTS_DUCK,
-        'shape_derived_bounds': _SHAPE_BOUNDS_DUCK,
-        'shape_volume': _SHAPE_VOLUME_DUCK,
-        'unit_conversions': _UNIT_CONV_DUCK,
-        'track_extremes': _TRACK_EXTREMES_DUCK,
-        'simhash_buckets': _simhash_duckdb(),
-        # media_features_stub: decode stub, plumbing-only
-        'ivf_ann_topk': _IVF_ANN_DUCK,
-        'ellipse_covariance_roundtrip': _ELLIPSE_COV_DUCK,
-        'split_by_length_chunks': _split_by_length_duckdb(),
-        'shape_dedup_groups': _SHAPE_DEDUP_DUCK,
-        'wkt_serialize_roundtrip': _WKT_SERIALIZE_DUCK,
-        'geojson_serialize_roundtrip': _GEOJSON_SERIALIZE_DUCK,
-        'vincenty_distance_pairs': _vincenty_duckdb(),
-        'karney_meridian_arc': _karney_meridian_duckdb(),
-        'web_mercator_roundtrip': _WEB_MERCATOR_DUCK.format(pts=_pts_customer_sql()),
-        'xyz_tile_quadkeys': _XYZ_TILES_DUCK.format(pts=_pts_customer_sql()),
-        'media_real_decode': _MEDIA_REAL_DUCK.format(pts=_pts_customer_sql()),
-        'wkb_roundtrip': _WKB_ROUNDTRIP_DUCK,
-        'geojson_featurecollection': _GEOJSON_FC_DUCK,
-        'split_multishapes': _SPLIT_MULTI_DUCK,
-        'raster_tile_assignment': _RASTER_TILES_DUCK,
-        'knn_pruned_topk': _knn_duckdb(),
-        'time_of_day_counts': _TIME_OF_DAY_DUCK,
-        'ivf_kmeans_train': _kmeans_duckdb(n_iter=1),
-        'streaming_sessionize': _SESSIONS_DUCK,
-        'rotate_coordinates': _ROTATE_DUCK,
-        'circle_bounding_coords': _circle_discretize_duckdb(),
-        'ellipse_bounding_coords': _ellipse_discretize_duckdb(),
-        'ring_wedge_coords': _ring_wedge_discretize_duckdb(),
-        'polygon_centroid': _polygon_centroid_duckdb(),
-        'kml_parse_roundtrip': _KML_ROUNDTRIP_DUCK,
-        'utm_project': _utm_project_duckdb(),
-        'tm_custom_project': _tm_custom_duckdb(),
-        'osgb_project': _osgb_project_duckdb(),
-        'gk_pulkovo_project': _gk_pulkovo_project_duckdb(),
-        'lcc_project': _lcc_project_duckdb(),
-        'albers_project': _albers_project_duckdb(),
-        'hash_sample_docs': _hash_sample_duckdb(),
-        'stratified_sample_docs': _stratified_sample_duckdb(),
-        'per_source_cap': _per_source_cap_duckdb(),
-        'streaming_exact_dedup': _STREAMING_DEDUP_DUCK,
-        'repetition_stats': _repetition_stats_duckdb(),
-        'mixture_sample_epochs': _mixture_sample_duckdb(),
-        'url_normalize_dedup': _URL_DEDUP_DUCK,
-        'pack_sequences_docs': _PACK_SEQUENCES_DUCK,
-        'assign_split_groups': _assign_split_duckdb(),
-        'host_stats_crawl': _host_stats_duckdb(),
-        'quality_gate_mask': _quality_gate_duckdb(),
-        'streaming_url_dedup': _streaming_url_dedup_duckdb(),
-        'mgrs_encode_strings': _mgrs_encode_duckdb(),
-        'shapefile_roundtrip': _SHAPEFILE_ROUNDTRIP_DUCK,
-        'dms_convert': _dms_duckdb(),
-        'bpe_train_merges': _bpe_sql.bpe_train_duckdb(_BPE_MERGES),
-        'bpe_encode_tokens': _bpe_sql.bpe_encode_duckdb(_BPE_MERGES),
-        'lm_score_docs': _lm_sql.lm_score_duckdb(),
-        'c4_filter_docs': _C4_FILTER_DUCK,
-        'span_dedup_docs': _SPAN_DEDUP_DUCK,
-        'pq_encode_codes': _pq_sql.pq_encode_duckdb(),
-        'pq_adc_topk': _pq_sql.pq_adc_duckdb(),
-        'exactsubstr_spans': _EXACTSUBSTR_DUCK,
-        'semantic_dedup_keep': _SEMDEDUP_DUCK,
-        'bm25_topk': _bm25_sql.bm25_topk_duckdb(_BM25_QUERIES, k=10),
-        'cms_token_counts': _CMS_DUCK,
-        'linear_count_tokens': _LINEAR_COUNT_DUCK,
-        'zonal_stats_circles': _ZONAL_DUCK,
-        'streaming_cms_sketch': _STREAMING_CMS_DUCK,
-        'streaming_minhash_dedup': _STREAMING_MINHASH_DUCK,
-        'hll_count_tokens': _HLL_DUCK,
-        'ann_recall_ivf': _ANN_RECALL_DUCK,
-        'streaming_hll_sketch': _HLL_DUCK,
-        'dsir_logweights': _DSIR_DUCK,
-        'dsir_select_topk': _dsir_topk_duckdb(),
-        'resample_track_grid': _resample_duckdb(),
-        'tfidf_top_terms': _TFIDF_DUCK,
-        'simplify_track_radial': _simplify_radial_duckdb(),
-        'hybrid_rrf_topk': _bm25_sql.hybrid_rrf_duckdb(_BM25_QUERIES, k=10),
-        'ivfpq_ann_topk': _pq_sql.ivfpq_topk_duckdb(),
-        'pages_mine_cells': _pages_mine_duckdb(),
-        'streaming_cell_counts': _streaming_cells_duckdb(),
-        'bloom_membership': _BLOOM_DUCK,
-        'weighted_sample_docs': _WEIGHTED_SAMPLE_DUCK,
-        'nchars_percentiles': _PERCENTILES_DUCK,
-        'minhash_cross_pairs': _MINHASH_CROSS_DUCK,
-        'ngram_novelty_docs': _NGRAM_NOVELTY_DUCK,
-        'resample_track_slerp': _resample_duckdb('slerp'),
-    }
+    return {name: sql for name, _, sql in _registry() if sql is not None}

@@ -155,12 +155,6 @@ def _ijk_rotate60_ccw(c):
     return _ijk_normalize((i + k, i + j, j + k))
 
 
-def _ijk_rotate60_cw(c):
-    i, j, k = c
-    # i->(1,0,1), j->(1,1,0), k->(0,1,1)
-    return _ijk_normalize((i + j, j + k, i + k))
-
-
 def _unit_ijk_to_digit_arr(ijk: np.ndarray) -> np.ndarray:
     n = _ijk_normalize_arr(ijk)
     digit = np.full(len(n), -1, dtype=np.int64)

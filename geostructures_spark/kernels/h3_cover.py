@@ -135,7 +135,7 @@ def polygon_to_cells(rings: List[np.ndarray], res: int) -> Set[str]:
     transmeridian polygons unsupported (h3 polyfill produces the
     lat-band complement there), so this is a deliberate
     correctness-over-parity divergence — verified by the independent
-    SQL cover replay (plans/h3_sql.py, r3)."""
+    SQL cover replay (oracles/h3_sql.py, r3)."""
     ensure_malloc_tuned()
     outline = _unwrap_ring(np.asarray(rings[0], dtype=np.float64))
     frame = float(outline[0, 0])

@@ -18,7 +18,7 @@ the scheme's own strong invariants (exhaustively tested):
 - Hilbert continuity: consecutive curve positions are edge-adjacent
   cells (the defining property of the curve);
 - an independent DuckDB SQL replay of the full pipeline matches
-  bit-for-bit (plans/s2_sql.py — same standard as the H3 oracles).
+  bit-for-bit (oracles/s2_sql.py — same standard as the H3 oracles).
 
 Vectorized NumPy throughout (one table-lookup pass per level).
 """

@@ -347,13 +347,6 @@ def shape_edges(shape: Dict, k: Optional[int] = None) -> np.ndarray:
     return np.vstack(segs) if segs else np.zeros((0, 4))
 
 
-def _first_boundary_point(shape: Dict, k: Optional[int] = None) -> Tuple[float, float]:
-    edges = shape_edges(shape, k)
-    if len(edges):
-        return float(edges[0, 0]), float(edges[0, 1])
-    return shape_centroid(shape)
-
-
 def shapes_intersect(a: Dict, b: Dict, k: Optional[int] = None) -> bool:
     """PolygonBase/LineString intersects_shape (structures.py:146-171,
     1617-1642): multishape -> any child; point -> containment; else any edge

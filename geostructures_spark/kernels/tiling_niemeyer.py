@@ -32,12 +32,6 @@ from geostructures_spark.kernels.geodesy import normalize_lonlat
 __all__ = ['cover_shape', 'hash_coordinates']
 
 
-def _cell_box_shape(cell: str, base: int) -> Dict:
-    min_lon, min_lat, max_lon, max_lat = nie.cell_to_box(cell, base)
-    return shp.make_shape('box', {'min_lon': min_lon, 'min_lat': min_lat,
-                                  'max_lon': max_lon, 'max_lat': max_lat})
-
-
 def _boxes_intersect_shape(bounds: np.ndarray, shape: Dict,
                            shape_edges: np.ndarray,
                            first_pt: np.ndarray) -> np.ndarray:

@@ -35,7 +35,7 @@ not exist before round r), so applying the table in training order is
 exactly the classic lowest-rank-first encoder. The DataFrame form
 computes the scan with a gaps-and-islands window (island = maximal run
 of consecutive matches; merge the odd-ranked members), which both
-Spark and the DuckDB oracle (plans/bpe_sql.py) express identically.
+Spark and the DuckDB oracle (oracles/bpe_sql.py) express identically.
 """
 
 from __future__ import annotations

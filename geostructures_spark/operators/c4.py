@@ -25,7 +25,8 @@ Scale shape (10^12 docs):
   corpus.remove_duplicate_lines, which the round-3 judge passed as the
   plan you want.
 
-Sentence semantics (shared with the SQL oracle, plans/c4_sql.py):
+Sentence semantics (shared with the SQL oracle, _C4_FILTER_DUCK in
+__spark_entry__.py):
 sentences are the non-empty trimmed segments of splitting on
 ``[.!?]+\\s*`` — RE2-compatible, so Spark (Java regex) and DuckDB (RE2)
 agree; lookbehind tricks that keep the punctuation are NOT RE2-safe and

@@ -193,6 +193,20 @@ def pq_encode(vectors: DataFrame, codebooks: DataFrame,
     return vectors.select(id_col, vec_col).mapInPandas(gen, schema)
 
 
+def _adc_sum(lut: np.ndarray, codes_m: np.ndarray) -> np.ndarray:
+    """ADC distances: LUT ``(..., m, ksub)`` gathered along the code paths
+    ``(n, m)`` and summed to ``(..., n)`` as a left fold over the m
+    subquantizers, the order the SQL oracle writes out. Every pq_adc_topk
+    strategy sums through here; ``ndarray.sum`` over m >= 8 terms adds
+    pairwise, so it would differ in the last bit. The per-subquantizer
+    take-accumulate also avoids an ``(..., n, m)`` temporary (4.3x faster
+    than the fancy-index sum at the 256 x 8192 x 8 big-Q block shape)."""
+    d = np.take(lut[..., 0, :], codes_m[:, 0], axis=-1)
+    for j in range(1, codes_m.shape[1]):
+        d += np.take(lut[..., j, :], codes_m[:, j], axis=-1)
+    return d
+
+
 def pq_adc_topk(codes: DataFrame, codebooks: DataFrame, queries: DataFrame,
                 k: int, id_col: str = 'vec_id', codes_col: str = 'codes',
                 q_id: str = 'query_id', q_vec: str = 'q_embedding',
@@ -258,7 +272,7 @@ def pq_adc_topk(codes: DataFrame, codebooks: DataFrame, queries: DataFrame,
             take = min(k + 1, n)
             out_q, out_n, out_d = [], [], []
             for qi in range(len(ids_q)):
-                d = lut[qi][np.arange(m)[None, :], codes_m].sum(axis=1)
+                d = _adc_sum(lut[qi], codes_m)
                 if take < n:
                     # argpartition is NOT tie-stable at the boundary: a
                     # candidate equal to the cut value can be dropped in
@@ -367,14 +381,7 @@ def pq_adc_topk_bigq(codes: DataFrame, codebooks: DataFrame,
                 c1 = min(c0 + cand_block, n)
                 cm = codes_m[c0:c1]
                 ids_b = nids[c0:c1]
-                # per-subquantizer take-accumulate: same left-to-right
-                # j-order (and so bit-identical sums) as the old
-                # lut[:, sub_idx, cm].sum(axis=2) 3-D fancy-index, but
-                # without its (qb, nb, m) temporary — measured 4.3x
-                # faster at the 256 x 8192 x 8 block shape
-                d = np.take(lut[:, 0, :], cm[:, 0], axis=1)
-                for j in range(1, m):
-                    d += np.take(lut[:, j, :], cm[:, j], axis=1)
+                d = _adc_sum(lut, cm)
                 nb = c1 - c0
                 take = min(k + 1, nb)
                 if take < nb:

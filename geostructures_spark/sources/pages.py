@@ -85,34 +85,6 @@ def _mention_coords(ids: np.ndarray, mention: int, seed: int):
     return np.round(lon, 6), np.round(lat, 6)
 
 
-def _fmt_dms_part(val: float, is_lon: bool) -> str:
-    quad = ('E' if val >= 0 else 'W') if is_lon else ('N' if val >= 0 else 'S')
-    a = abs(val)
-    deg = int(a)
-    rem = (a - deg) * 60
-    mins = int(rem)
-    secs = round((rem - mins) * 60, 4)
-    return f'{deg}°{mins}\'{secs}"{quad}'
-
-
-def _fmt_qdms_part(val: float, is_lon: bool) -> str:
-    quad = ('E' if val >= 0 else 'W') if is_lon else ('N' if val >= 0 else 'S')
-    a = abs(val)
-    deg = int(a)
-    rem = (a - deg) * 60
-    mins = int(rem)
-    secs = (rem - mins) * 60
-    hund = int(round(secs * 100))
-    if hund >= 6000:  # carry
-        hund -= 6000
-        mins += 1
-        if mins >= 60:
-            mins -= 60
-            deg += 1
-    width = 3 if is_lon else 2
-    return f'{quad}{deg:0{width}d}{mins:02d}{hund:04d}'
-
-
 def _f2s(arr: np.ndarray) -> np.ndarray:
     """float64 array -> shortest-roundtrip decimal strings (vectorized)."""
     return np.array([repr(float(v)) for v in arr], dtype=object)

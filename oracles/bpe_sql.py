@@ -1,6 +1,6 @@
 """DuckDB SQL replay of the BPE train/encode pipeline (operators/bpe.py).
 
-Same oracle architecture as plans/h3_sql.py and the unrolled-iteration
+Same oracle architecture as oracles/h3_sql.py and the unrolled-iteration
 vincenty SQL: the iterative algorithm is unrolled into one CTE block per
 merge round, so DuckDB independently recomputes the pair counts, the
 argmax merge rule, and the greedy-leftmost merge application

@@ -16,7 +16,7 @@ ln(c1/N), ln(c2/c1_prev), ln((alpha*c1)/N), all in doubles, rounded to
 
 from __future__ import annotations
 
-from geostructures_spark.plans.bpe_sql import WORDS_FROM_DOCUMENTS
+from oracles.bpe_sql import WORDS_FROM_DOCUMENTS
 
 __all__ = ['lm_score_duckdb']
 

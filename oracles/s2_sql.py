@@ -5,12 +5,12 @@ Hilbert curve position -> 64-bit id), one 2-bit Hilbert step per CTE
 layer with the published order/orientation tables as array literals.
 UBIGINT arithmetic uses multiplication by power-of-two constants
 (DuckDB's << overflow-checks at bit 61). Same oracle standard as
-plans/h3_sql.py.
+oracles/h3_sql.py.
 """
 
 from __future__ import annotations
 
-from geostructures_spark.plans.h3_sql import _Pipe, _r
+from oracles.h3_sql import _Pipe, _r
 
 __all__ = ['s2_latlng_to_token_sql', 's2_cell_center_sql',
            's2_circle_cover_counts_sql']
@@ -149,7 +149,7 @@ def s2_cell_center_sql(cells_sql: str, level: int,
 def s2_circle_cover_counts_sql(shapes_sql: str, level: int,
                                radius_m: float, ring_k: int = 36) -> str:
     """Per-shape S2 polyfill counts for circles, fully replayed in SQL —
-    the same structure as the H3 cover oracle (plans/h3_sql.py): polar
+    the same structure as the H3 cover oracle (oracles/h3_sql.py): polar
     candidate grid -> forward transform -> distinct cells -> inverse for
     centers -> even-odd PIP of centers vs the circle's discretized ring
     in the antimeridian-unwrapped frame. Candidate grid spacing is 0.4x

@@ -54,7 +54,7 @@ def compare(name: str, spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame) -> str:
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else '/root/testdata/sf0.001'
     only = set(sys.argv[2:])
-    spark = get_session(cores=8)
+    spark = get_session()
     con = duckdb.connect()
     for t in entrymod.TABLES:
         p = os.path.join(sf_dir, f'{t}.parquet')

@@ -1,4 +1,4 @@
-"""BPE train/encode tests (operators/bpe.py, plans/bpe_sql.py).
+"""BPE train/encode tests (operators/bpe.py, oracles/bpe_sql.py).
 
 The reference trainer here is an INDEPENDENT pure-Python BPE (Counter
 over adjacent pairs, per-word tuple state) written to the published
@@ -19,8 +19,7 @@ from geostructures_spark.operators.bpe import (EOW, bpe_encode, bpe_train,
                                                encode_word, merge_once,
                                                word_vocab, words_expr)
 from geostructures_spark.operators.bpe import _apply_merge, _explode_symbols
-from geostructures_spark.plans.bpe_sql import (bpe_encode_duckdb,
-                                               bpe_train_duckdb)
+from oracles.bpe_sql import bpe_encode_duckdb, bpe_train_duckdb
 from tests.test_spark_operators import spark  # shared session fixture
 
 

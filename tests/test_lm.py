@@ -1,5 +1,5 @@
 """Stupid-backoff LM scorer (operators/lm.py) vs hand-computed goldens,
-the DuckDB replay (plans/lm_sql.py), and the plan contract."""
+the DuckDB replay (oracles/lm_sql.py), and the plan contract."""
 
 import math
 
@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from geostructures_spark.operators.lm import (ALPHA, doc_tokens, lm_counts,
                                               perplexity_filter, score_docs)
-from geostructures_spark.plans.lm_sql import lm_score_duckdb
+from oracles.lm_sql import lm_score_duckdb
 
 from tests.test_spark_operators import spark  # shared session fixture
 

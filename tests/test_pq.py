@@ -189,9 +189,11 @@ def test_adc_dist_col_missing_query_raises(spark, data):
 
 def test_bigq_distributed_matches_broadcast(spark, data):
     # r5 task 3: the fragment-replicate big-Q path must produce exactly
-    # the broadcast path's rows, for any split count.
+    # the broadcast path's rows, for any split count. m=8 over dim 8 gives
+    # dsub 1 and an 8-term distance sum, so a change in the order the two
+    # paths add subspace distances shows up as a value mismatch.
     from geostructures_spark.operators.pq import pq_adc_topk_bigq
-    m, ksub = 2, 4
+    m, ksub = 8, 16
     vecs = _vecs(spark, data)
     books = pq_train(vecs, m=m, ksub=ksub, n_iter=1)
     enc = pq_encode(vecs, books)
