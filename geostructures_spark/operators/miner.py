@@ -6,26 +6,27 @@ text -> coordinate mining"). Two steps:
 1. ``extract_text``: html BINARY -> text STRING, a pure JVM-side expression
    (cast + regexp) — byte-identical inverse of the generator's wrapper,
    enforced by tests (north_rule: byte-identical extracted text per url).
-2. ``mine_points``: Arrow-batched ``mapInPandas``. Each batch joins its
-   texts into one buffer and runs a single compiled-regex scan (one C-level
-   pass per batch, no per-row regex calls), maps match offsets back to rows
-   with searchsorted, converts DMS/QDMS groups vectorized with NumPy using
-   the reference's exact formulas (coordinates.py:127-148 from_dms — no
-   rounding; :181-203 from_qdms — round_half_up at 6 decimals), and emits
-   the exploded points frame directly (no intermediate array column).
+2. ``mine_points``: Arrow-batched ``mapInArrow``. Each batch runs one
+   compiled bytes-regex scan over its Arrow string value buffer (one
+   C-level pass per batch, no per-row Python strings), maps match offsets
+   back to rows with searchsorted, rescans on its own each row that a
+   match across a row boundary touched, converts DMS/QDMS groups vectorized
+   with NumPy using the reference's exact formulas (coordinates.py:127-148
+   from_dms — no rounding; :181-203 from_qdms — round_half_up at 6
+   decimals), and emits the exploded points frame directly (no
+   intermediate array column). ``mine_cell_counts`` is the same scan
+   fused with the Niemeyer cell assignment and a per-batch count.
 
 ``point_idx`` is the mention ordinal within the page (FIXTURES.md §2);
-matches come out of the single scan in position order, so a per-row running
-count gives the ordinal.
+matches are ordered by row and position, so a per-row running count gives
+the ordinal.
 """
 
 from __future__ import annotations
 
 import re
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -38,10 +39,8 @@ _DMS = (r'(?P<lod>\d+)°(?P<lom>\d+)\'(?P<los>\d+(?:\.\d+)?)"(?P<loq>[EW]) '
         r'(?P<lad>\d+)°(?P<lam>\d+)\'(?P<las>\d+(?:\.\d+)?)"(?P<laq>[NS])')
 _QDMS = r'(?P<qlon>[EW]\d{9}) (?P<qlat>[NS]\d{8})'
 MENTION_REGEX = f'(?:{_DEC})|(?:{_DMS})|(?:{_QDMS})'
-_COMPILED = re.compile(MENTION_REGEX)
-
-# batch separator that can never occur inside a match
-_SEP = '\n\x00\n'
+# bytes: ``\d`` matches ASCII digits only
+_COMPILED_BYTES = re.compile(MENTION_REGEX.encode('utf-8'))
 
 POINTS_SCHEMA = ('url string, warc_ts timestamp, point_idx int, '
                  'lon double, lat double, fmt string')
@@ -53,55 +52,20 @@ def extract_text_expr(html_col: Column) -> Column:
     return F.regexp_extract(html_col.cast('string'), r'(?s)^<html><body>(.*)</body></html>$', 1)
 
 
-def _mine_batch(texts: pd.Series) -> tuple:
-    """One regex scan over the whole batch. Returns (row_positions,
-    point_idx, lon, lat, fmt) numpy arrays."""
-    tl = texts.fillna('').tolist()
-    if not tl:
-        z = np.zeros(0)
-        return (np.zeros(0, np.int64), np.zeros(0, np.int64), z, z.copy(),
-                np.zeros(0, dtype=object))
-    big = _SEP.join(tl)
-    starts = np.zeros(len(tl), dtype=np.int64)
-    lens = np.fromiter((len(t) for t in tl), dtype=np.int64, count=len(tl))
-    if len(tl) > 1:
-        starts[1:] = np.cumsum(lens[:-1] + len(_SEP))
-
-    rows, kinds = [], []
-    g_dec, g_dms, g_q = [], [], []
-    for m in _COMPILED.finditer(big):
-        rows.append(m.start())
-        if m.group('flag') is not None:
-            kinds.append(0)
-            g_dec.append((m.group('flag'), m.group('a'), m.group('b')))
-        elif m.group('lod') is not None:
-            kinds.append(1)
-            g_dms.append((m.group('lod'), m.group('lom'), m.group('los'),
-                          m.group('loq'), m.group('lad'), m.group('lam'),
-                          m.group('las'), m.group('laq')))
-        else:
-            kinds.append(2)
-            g_q.append((m.group('qlon'), m.group('qlat')))
-
-    n = len(rows)
-    if n == 0:
-        z = np.zeros(0)
-        return (np.zeros(0, np.int64), np.zeros(0, np.int64), z, z.copy(),
-                np.zeros(0, dtype=object))
-
-    pos = np.asarray(rows, dtype=np.int64)
-    row_idx = np.searchsorted(starts, pos, side='right') - 1
-    kinds = np.asarray(kinds, dtype=np.int64)
-
+def _parse_match_lists(kinds, g_dec, g_dms, g_q):
+    """Vectorized conversion of the bytes regex groups, in match order, to
+    lon/lat/fmt arrays."""
+    n = len(kinds)
     lon = np.zeros(n)
     lat = np.zeros(n)
     fmt = np.empty(n, dtype=object)
+    kinds = np.asarray(kinds, dtype=np.int64)
 
     if g_dec:
         d = np.array(g_dec, dtype=object)
         a = d[:, 1].astype(np.float64)
         b = d[:, 2].astype(np.float64)
-        is_lonlat = d[:, 0] == 'lonlat'
+        is_lonlat = d[:, 0] == b'lonlat'
         sel = kinds == 0
         lon[sel] = np.where(is_lonlat, a, b)
         lat[sel] = np.where(is_lonlat, b, a)
@@ -112,94 +76,27 @@ def _mine_batch(texts: pd.Series) -> tuple:
         # from_dms: deg + min/60 + sec/3600, sign by quadrant; no rounding
         dlon = (d[:, 0].astype(np.float64) + d[:, 1].astype(np.float64) / 60
                 + d[:, 2].astype(np.float64) / 3600)
-        dlon *= np.where(d[:, 3] == 'W', -1.0, 1.0)
+        dlon *= np.where(d[:, 3] == b'W', -1.0, 1.0)
         dlat = (d[:, 4].astype(np.float64) + d[:, 5].astype(np.float64) / 60
                 + d[:, 6].astype(np.float64) / 3600)
-        dlat *= np.where(d[:, 7] == 'S', -1.0, 1.0)
+        dlat *= np.where(d[:, 7] == b'S', -1.0, 1.0)
         sel = kinds == 1
         lon[sel] = dlon
         lat[sel] = dlat
         fmt[sel] = 'dms'
 
     if g_q:
-        qlon_s = np.array([s for s, _ in g_q])
-        qlat_s = np.array([s for _, s in g_q])
         # from_qdms: QDDDMMSSHH -> deg + min/60 + 'SS.HH'/3600; 6dp round_half_up
-        lon_deg = np.array([s[1:4] for s in qlon_s], dtype=np.float64)
-        lon_min = np.array([s[4:6] for s in qlon_s], dtype=np.float64)
-        lon_sec = np.array([s[6:8] + '.' + s[8:] for s in qlon_s], dtype=np.float64)
-        vlon = (lon_deg + lon_min / 60 + lon_sec / 3600)
-        vlon *= np.where(np.array([s[0] for s in qlon_s]) == 'W', -1.0, 1.0)
-        lat_deg = np.array([s[1:3] for s in qlat_s], dtype=np.float64)
-        lat_min = np.array([s[3:5] for s in qlat_s], dtype=np.float64)
-        lat_sec = np.array([s[5:7] + '.' + s[7:] for s in qlat_s], dtype=np.float64)
-        vlat = (lat_deg + lat_min / 60 + lat_sec / 3600)
-        vlat *= np.where(np.array([s[0] for s in qlat_s]) == 'S', -1.0, 1.0)
-        sel = kinds == 2
-        lon[sel] = round_half_up(vlon, 6)
-        lat[sel] = round_half_up(vlat, 6)
-        fmt[sel] = 'qdms'
-
-    lon, lat = normalize_lonlat(lon, lat)
-
-    # point_idx: running count within each row (matches are in position order)
-    point_idx = np.zeros(n, dtype=np.int64)
-    if n > 1:
-        # vectorized segmented cumcount (reset at each row change)
-        change = np.r_[True, row_idx[1:] != row_idx[:-1]]
-        seg_starts = np.flatnonzero(change)
-        seg_id = np.cumsum(change) - 1
-        point_idx = np.arange(n) - seg_starts[seg_id]
-    return row_idx, point_idx, lon, lat, fmt
-
-
-_COMPILED_BYTES = re.compile(MENTION_REGEX.encode('utf-8'))
-
-
-def _parse_match_lists(rows, kinds, g_dec, g_dms, g_q):
-    """Shared vectorized conversion of collected regex groups (str or bytes)
-    to lon/lat/fmt arrays; same math as _mine_batch's body."""
-    n = len(rows)
-    lon = np.zeros(n)
-    lat = np.zeros(n)
-    fmt = np.empty(n, dtype=object)
-    kinds = np.asarray(kinds, dtype=np.int64)
-
-    if g_dec:
-        d = np.array(g_dec, dtype=object)
-        a = d[:, 1].astype(np.float64)
-        b = d[:, 2].astype(np.float64)
-        is_lonlat = np.array([x in ('lonlat', b'lonlat') for x in d[:, 0]])
-        sel = kinds == 0
-        lon[sel] = np.where(is_lonlat, a, b)
-        lat[sel] = np.where(is_lonlat, b, a)
-        fmt[sel] = 'decimal'
-
-    if g_dms:
-        d = np.array(g_dms, dtype=object)
-        dlon = (d[:, 0].astype(np.float64) + d[:, 1].astype(np.float64) / 60
-                + d[:, 2].astype(np.float64) / 3600)
-        dlon *= np.where(np.array([x in ('W', b'W') for x in d[:, 3]]), -1.0, 1.0)
-        dlat = (d[:, 4].astype(np.float64) + d[:, 5].astype(np.float64) / 60
-                + d[:, 6].astype(np.float64) / 3600)
-        dlat *= np.where(np.array([x in ('S', b'S') for x in d[:, 7]]), -1.0, 1.0)
-        sel = kinds == 1
-        lon[sel] = dlon
-        lat[sel] = dlat
-        fmt[sel] = 'dms'
-
-    if g_q:
-        dec = lambda s: s.decode() if isinstance(s, bytes) else s
-        qlon_s = [dec(s) for s, _ in g_q]
-        qlat_s = [dec(s) for _, s in g_q]
+        qlon_s = [s for s, _ in g_q]
+        qlat_s = [s for _, s in g_q]
         vlon = (np.array([s[1:4] for s in qlon_s], dtype=np.float64)
                 + np.array([s[4:6] for s in qlon_s], dtype=np.float64) / 60
-                + np.array([s[6:8] + '.' + s[8:] for s in qlon_s], dtype=np.float64) / 3600)
-        vlon *= np.where(np.array([s[0] for s in qlon_s]) == 'W', -1.0, 1.0)
+                + np.array([s[6:8] + b'.' + s[8:] for s in qlon_s], dtype=np.float64) / 3600)
+        vlon *= np.where(np.array([s[:1] for s in qlon_s]) == b'W', -1.0, 1.0)
         vlat = (np.array([s[1:3] for s in qlat_s], dtype=np.float64)
                 + np.array([s[3:5] for s in qlat_s], dtype=np.float64) / 60
-                + np.array([s[5:7] + '.' + s[7:] for s in qlat_s], dtype=np.float64) / 3600)
-        vlat *= np.where(np.array([s[0] for s in qlat_s]) == 'S', -1.0, 1.0)
+                + np.array([s[5:7] + b'.' + s[7:] for s in qlat_s], dtype=np.float64) / 3600)
+        vlat *= np.where(np.array([s[:1] for s in qlat_s]) == b'S', -1.0, 1.0)
         sel = kinds == 2
         lon[sel] = round_half_up(vlon, 6)
         lat[sel] = round_half_up(vlat, 6)
@@ -252,11 +149,10 @@ def _mine_arrow_batch(text_arr):
             bad_rows = set(r0[crossing].tolist()) | set(r1[crossing].tolist())
             keep = ~np.isin(r0, list(bad_rows))
             matches = [m for m, k in zip(matches, keep) if k]
-            # rescan the affected rows individually with the str regex
+            # rescan each affected row on its own with the same bytes regex
             for r in sorted(bad_rows):
-                s = bytes(data[rel[r]:rel[r + 1]]).decode('utf-8', errors='replace')
-                for m in _COMPILED.finditer(s):
-                    matches.append((int(rel[r]) + m.start(), 0) + groups_of(m))
+                for m in _COMPILED_BYTES.finditer(data, int(rel[r]), int(rel[r + 1])):
+                    matches.append((m.start(), m.end()) + groups_of(m))
 
     n = len(matches)
     if n == 0:
@@ -273,7 +169,7 @@ def _mine_arrow_batch(text_arr):
     g_dms = [matches[i][3] for i in order if matches[i][2] == 1]
     g_q = [matches[i][3] for i in order if matches[i][2] == 2]
 
-    lon, lat, fmt = _parse_match_lists(list(range(n)), kinds, g_dec, g_dms, g_q)
+    lon, lat, fmt = _parse_match_lists(kinds, g_dec, g_dms, g_q)
     lon, lat = normalize_lonlat(lon, lat)
 
     point_idx = np.zeros(n, dtype=np.int64)
@@ -285,9 +181,8 @@ def _mine_arrow_batch(text_arr):
     return row_idx, point_idx, lon, lat, fmt
 
 
-def mine_points(pages: DataFrame, from_html: bool = False,
-                cell_length: int | None = None, cell_base: int = 16) -> DataFrame:
-    """pages -> points with (url, warc_ts, point_idx, lon, lat, fmt[, cell]).
+def mine_points(pages: DataFrame, from_html: bool = False) -> DataFrame:
+    """pages -> points with (url, warc_ts, point_idx, lon, lat, fmt).
 
     Column-prunes to (url, warc_ts, text) before the Arrow boundary so the
     heavy ``html`` binary never crosses it (unless ``from_html`` exercises
@@ -295,36 +190,26 @@ def mine_points(pages: DataFrame, from_html: bool = False,
 
     Arrow-native (mapInArrow): the mention regex runs directly over the
     Arrow string value buffer as bytes — no per-row Python string objects
-    are ever materialized. ``cell_length`` fuses the Niemeyer cell
-    assignment into the same Python stage (mine + tile in one JVM<->Python
-    crossing) — the scale path for the pages pipeline."""
+    are ever materialized. ``mine_cell_counts`` is the fused mine + tile
+    path."""
     text_col = extract_text_expr(F.col('html')) if from_html else F.col('text')
     pruned = pages.select('url', 'warc_ts', text_col.alias('_text'))
 
-    schema = POINTS_SCHEMA + (', cell string' if cell_length else '')
-
     def run(batches):
         import pyarrow as pa
-        from geostructures_spark.kernels import niemeyer as nie
         for batch in batches:
             row_idx, point_idx, lon, lat, fmt = _mine_arrow_batch(batch.column(2))
             idx = pa.array(row_idx, type=pa.int64())
-            cols = [
+            yield pa.RecordBatch.from_arrays([
                 batch.column(0).take(idx),
                 batch.column(1).take(idx),
                 pa.array(point_idx.astype(np.int32), type=pa.int32()),
                 pa.array(lon, type=pa.float64()),
                 pa.array(lat, type=pa.float64()),
                 pa.array(fmt.astype(str), type=pa.string()),
-            ]
-            names = ['url', 'warc_ts', 'point_idx', 'lon', 'lat', 'fmt']
-            if cell_length:
-                cols.append(pa.array(nie.encode(lon, lat, cell_length, cell_base).astype(str),
-                                     type=pa.string()))
-                names.append('cell')
-            yield pa.RecordBatch.from_arrays(cols, names=names)
+            ], names=['url', 'warc_ts', 'point_idx', 'lon', 'lat', 'fmt'])
 
-    return pruned.mapInArrow(run, schema=schema)
+    return pruned.mapInArrow(run, schema=POINTS_SCHEMA)
 
 
 def mine_cell_counts(pages: DataFrame, from_html: bool = False,

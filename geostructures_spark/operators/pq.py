@@ -196,11 +196,12 @@ def pq_encode(vectors: DataFrame, codebooks: DataFrame,
 def _adc_sum(lut: np.ndarray, codes_m: np.ndarray) -> np.ndarray:
     """ADC distances: LUT ``(..., m, ksub)`` gathered along the code paths
     ``(n, m)`` and summed to ``(..., n)`` as a left fold over the m
-    subquantizers, the order the SQL oracle writes out. Every pq_adc_topk
-    strategy sums through here; ``ndarray.sum`` over m >= 8 terms adds
-    pairwise, so it would differ in the last bit. The per-subquantizer
-    take-accumulate also avoids an ``(..., n, m)`` temporary (4.3x faster
-    than the fancy-index sum at the 256 x 8192 x 8 big-Q block shape)."""
+    subquantizers, the order the SQL oracle writes out. Every ADC scorer
+    (both pq_adc_topk strategies, adc_dist_col, adc_dist_joined_col) sums
+    through here; ``ndarray.sum`` over m >= 8 terms adds pairwise, so it
+    would differ in the last bit. The per-subquantizer take-accumulate also
+    avoids an ``(..., n, m)`` temporary (4.3x faster than the fancy-index
+    sum at the 256 x 8192 x 8 big-Q block shape)."""
     d = np.take(lut[..., 0, :], codes_m[:, 0], axis=-1)
     for j in range(1, codes_m.shape[1]):
         d += np.take(lut[..., j, :], codes_m[:, j], axis=-1)
@@ -456,7 +457,10 @@ def adc_dist_col(query_ids, codes_col, codebooks: DataFrame,
                 f'`queries` DataFrame — every query_id in the scored rows '
                 f'must exist there (silent mis-scoring guard)')
         cm = np.asarray(codes.tolist(), dtype=np.int64)
-        d = lut[qidx[:, None], np.arange(m)[None, :], cm].sum(axis=1)
+        d = np.empty(len(qidx), dtype=np.float64)
+        for qi in np.unique(qidx):
+            rows = qidx == qi
+            d[rows] = _adc_sum(lut[qi], cm[rows])
         return pd.Series(d)
 
     return _adc(query_ids, codes_col)
@@ -484,12 +488,11 @@ def adc_dist_joined_col(query_ids, q_vecs, codes_col, codebooks: DataFrame):
         out = np.empty(len(ids), dtype=np.float64)
         uniq, first, inv = np.unique(ids, return_index=True,
                                      return_inverse=True)
-        sub_idx = np.arange(m)[None, :]
         for ui in range(len(uniq)):
             mask = inv == ui
             q = np.asarray(qvec.iloc[first[ui]], dtype=np.float64)
             lut = ((q.reshape(m, 1, dsub) - C) ** 2).sum(axis=2)
-            out[mask] = lut[sub_idx, cm[mask]].sum(axis=1)
+            out[mask] = _adc_sum(lut, cm[mask])
         return pd.Series(out)
 
     return _adc(query_ids, q_vecs, codes_col)

@@ -7,40 +7,36 @@ filter_contains :147-159, intersects :433-458 in collections.py):
   covers_a = cover_shapes(A)         (exploded cell covers)
   covers_b = cover_shapes(B)
   candidates = covers_a ⋈ covers_b ON cell  (distinct id pairs)
+  sides      = (id, dt_start, dt_end, JSON spec) per shape, joined onto
+               the candidates by id (broadcast within the spatial join's
+               budget, shuffled beyond it)
   time gate  = right-open interval Column predicate
-  exact      = shapes_intersect / shape_contains_shape kernels per pair
+  exact      = shapes_intersect / shape_contains_shape kernels per pair,
+               each kernel built once per Arrow batch from its spec
 
-Shape geometries travel once as broadcast catalogs. Candidate pairs only
-exist where covers overlap — the cell join is the pruning structure
-(replacing the reference's per-pair sweep line at cluster scale).
+Shape geometries never reach the driver: they ride the id joins as JSON
+specs. Candidate pairs only exist where covers overlap — the cell join is
+the pruning structure (replacing the reference's per-pair sweep line at
+cluster scale).
 """
 
 from __future__ import annotations
 
-from typing import Dict
+import json
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from geostructures_spark.functions.geo import (
     interval_contains_expr, interval_intersects_expr,
 )
+from geostructures_spark.kernels import shapes as shp
+from geostructures_spark.operators import spatial_join as spj
 from geostructures_spark.operators.tiling import cover_shapes, shape_row_to_kernel
 
 __all__ = ['shape_join', 'filter_shapes_by_probe']
-
-
-def _catalog_broadcast(spark: SparkSession, shapes: DataFrame):
-    cols = ['shape_id', 'kind', 'params', 'rings'] + (
-        ['poly_sizes'] if 'poly_sizes' in shapes.columns else [])
-    rows = shapes.select(*cols).collect()
-    cat = {}
-    for r in rows:
-        d = r.asDict(recursive=True)
-        cat[d['shape_id']] = shape_row_to_kernel(d)
-    return spark.sparkContext.broadcast(cat)
 
 
 def shape_join(shapes_a: DataFrame, shapes_b: DataFrame,
@@ -58,33 +54,27 @@ def shape_join(shapes_a: DataFrame, shapes_b: DataFrame,
     """
     if predicate not in ('intersects', 'contains'):
         raise ValueError(predicate)
-    from geostructures_spark.operators.spatial_join import (
-        _BROADCAST_MAX_SHAPES, _BROADCAST_MAX_RING_VERTS, _catalog_size,
-        _shape_spec_col)
-    spark = shapes_a.sparkSession
-    na, va = _catalog_size(shapes_a)[:2]
-    nb, vb = _catalog_size(shapes_b)[:2]
-    use_broadcast = (na + nb <= _BROADCAST_MAX_SHAPES and
-                     va + vb <= _BROADCAST_MAX_RING_VERTS)
+    test = shp.shapes_intersect if predicate == 'intersects' else shp.shape_contains_shape
 
-    cov_a = cover_shapes(shapes_a, length, base, scheme, resolution,
-                         n_partitions=min(64, max(4, na // 25 + 1))) \
-        .withColumnRenamed('shape_id', 'a_id')
-    cov_b = cover_shapes(shapes_b, length, base, scheme, resolution,
-                         n_partitions=min(64, max(4, nb // 25 + 1))) \
-        .withColumnRenamed('shape_id', 'b_id')
-    cand = cov_a.join(cov_b, 'cell').select('a_id', 'b_id').distinct()
+    # the budget is read here, at call time, so callers can lower it
+    na, va = spj._catalog_size(shapes_a)[:2]
+    nb, vb = spj._catalog_size(shapes_b)[:2]
+    hint = F.broadcast if (na + nb <= spj._BROADCAST_MAX_SHAPES and
+                           va + vb <= spj._BROADCAST_MAX_RING_VERTS) else (lambda df: df)
 
-    dt_a = shapes_a.select(F.col('shape_id').alias('a_id'),
-                           F.col('dt_start').alias('a_start'),
-                           F.col('dt_end').alias('a_end'))
-    dt_b = shapes_b.select(F.col('shape_id').alias('b_id'),
-                           F.col('dt_start').alias('b_start'),
-                           F.col('dt_end').alias('b_end'))
-    if use_broadcast:
-        cand = cand.join(F.broadcast(dt_a), 'a_id').join(F.broadcast(dt_b), 'b_id')
-    else:
-        cand = cand.join(dt_a, 'a_id').join(dt_b, 'b_id')
+    def side(shapes: DataFrame, n: int, s: str):
+        covers = cover_shapes(shapes, length, base, scheme, resolution,
+                              n_partitions=min(64, max(4, n // 25 + 1)))
+        rel = shapes.select(F.col('shape_id').alias(f'{s}_id'),
+                            F.col('dt_start').alias(f'{s}_start'),
+                            F.col('dt_end').alias(f'{s}_end'),
+                            spj._shape_spec_col(shapes).alias(f'_spec_{s}'))
+        return covers.withColumnRenamed('shape_id', f'{s}_id'), hint(rel)
+
+    cov_a, rel_a = side(shapes_a, na, 'a')
+    cov_b, rel_b = side(shapes_b, nb, 'b')
+    cand = (cov_a.join(cov_b, 'cell').select('a_id', 'b_id').distinct()
+            .join(rel_a, 'a_id').join(rel_b, 'b_id'))
 
     if time_gated:
         untimed = (F.col('a_start').isNull() | F.col('a_end').isNull() |
@@ -97,61 +87,24 @@ def shape_join(shapes_a: DataFrame, shapes_b: DataFrame,
             gate = untimed | interval_contains_expr(*a_us, *b_us)
         cand = cand.filter(gate)
 
-    from geostructures_spark.kernels import shapes as shp
-
-    if use_broadcast:
-        bc_a = _catalog_broadcast(spark, shapes_a)
-        bc_b = _catalog_broadcast(spark, shapes_b)
-
-        @F.pandas_udf(T.BooleanType())
-        def _pred(a_id: pd.Series, b_id: pd.Series) -> pd.Series:
-            ca, cb = bc_a.value, bc_b.value
-            out = []
-            for a, b in zip(a_id, b_id):
-                sa = ca.get(a)
-                sb = cb.get(b)
-                if sa is None or sb is None:
-                    out.append(False)
-                elif predicate == 'intersects':
-                    out.append(shp.shapes_intersect(sa, sb))
-                else:
-                    out.append(shp.shape_contains_shape(sa, sb))
-            return pd.Series(out, index=a_id.index)
-
-        return (cand.filter(_pred(F.col('a_id'), F.col('b_id')))
-                .select('a_id', 'b_id'))
-
-    # no-broadcast path: geometry specs travel through shape_id equi-joins;
-    # kernels built once per distinct shape per Arrow batch
-    import json as _json
-    from geostructures_spark.operators.tiling import shape_row_to_kernel
-
-    spec_a = shapes_a.select(F.col('shape_id').alias('a_id'),
-                             _shape_spec_col(shapes_a).alias('_spec_a'))
-    spec_b = shapes_b.select(F.col('shape_id').alias('b_id'),
-                             _shape_spec_col(shapes_b).alias('_spec_b'))
-    cand = cand.join(spec_a, 'a_id').join(spec_b, 'b_id')
-
     @F.pandas_udf(T.BooleanType())
-    def _pred_spec(a_id: pd.Series, sa_js: pd.Series,
-                   b_id: pd.Series, sb_js: pd.Series) -> pd.Series:
+    def _pred(a_id: pd.Series, sa_js: pd.Series,
+              b_id: pd.Series, sb_js: pd.Series) -> pd.Series:
+        # one kernel per distinct shape per Arrow batch
         memo_a, memo_b = {}, {}
         out = []
         for a, sa_j, b, sb_j in zip(a_id, sa_js, b_id, sb_js):
             sa = memo_a.get(a)
             if sa is None:
-                sa = memo_a[a] = shape_row_to_kernel(_json.loads(sa_j))
+                sa = memo_a[a] = shape_row_to_kernel(json.loads(sa_j))
             sb = memo_b.get(b)
             if sb is None:
-                sb = memo_b[b] = shape_row_to_kernel(_json.loads(sb_j))
-            if predicate == 'intersects':
-                out.append(shp.shapes_intersect(sa, sb))
-            else:
-                out.append(shp.shape_contains_shape(sa, sb))
+                sb = memo_b[b] = shape_row_to_kernel(json.loads(sb_j))
+            out.append(test(sa, sb))
         return pd.Series(out, index=a_id.index)
 
-    return (cand.filter(_pred_spec(F.col('a_id'), F.col('_spec_a'),
-                                   F.col('b_id'), F.col('_spec_b')))
+    return (cand.filter(_pred(F.col('a_id'), F.col('_spec_a'),
+                              F.col('b_id'), F.col('_spec_b')))
             .select('a_id', 'b_id'))
 
 

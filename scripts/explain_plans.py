@@ -115,6 +115,32 @@ def main() -> int:
           f'_spec through a broadcast shape_id join')
     ok &= spec_bc
 
+    # shape-vs-shape join: one spec UDF refines every pair, each side's
+    # (id, dt, _spec) relation joined once by id — broadcast within the
+    # budget, shuffled beyond it. Spark's own size-based broadcast is off
+    # here, so only the operator's hints can broadcast.
+    from geostructures_spark.operators import spatial_join as spj
+    spark.conf.set('spark.sql.autoBroadcastJoinThreshold', '-1')
+    budget = spj._BROADCAST_MAX_SHAPES
+    for within in (True, False):
+        spj._BROADCAST_MAX_SHAPES = budget if within else 0
+        plan = formatted(em.queries()['shape_join_intersects'](spark, sf))
+        n_py = len(re.findall(r'^\(\d+\) \w*EvalPython', plan, flags=re.M))
+        bc = re.findall(r'^\(\d+\) BroadcastExchange\nInput \[\d+\]: \[([^\]]*)\]',
+                        plan, flags=re.M)
+        bc_specs = sorted(s for cols in bc for s in ('_spec_a', '_spec_b') if s in cols)
+        if within:
+            good = n_py == 1 and bc_specs == ['_spec_a', '_spec_b']
+            what = 'within budget: one Python eval node, both spec sides broadcast'
+        else:
+            good = (not bc_specs and '_spec_a' in plan and '_spec_b' in plan
+                    and 'SortMergeJoin' in plan)
+            what = 'budget 0: spec sides planned as shuffle joins'
+        print(f'[{"OK" if good else "FAIL"}] shape_join {what}')
+        ok &= good
+    spj._BROADCAST_MAX_SHAPES = budget
+    spark.conf.unset('spark.sql.autoBroadcastJoinThreshold')
+
     # mixed catalogs: every cover is the JVM window at the shape's level
     # (no Python cover stage) and the join keys on the packed BIGINT cell
     # index, not a cell string — within the window budget at length 4,

@@ -214,9 +214,11 @@ def test_bigq_distributed_matches_broadcast(spark, data):
 
 
 def test_ivfpq_distributed_matches_broadcast(spark, data):
+    # m=8 over dim 8: an 8-term distance sum, where NumPy's pairwise
+    # ndarray.sum and the oracle's left fold differ in the last bit
     from geostructures_spark.operators.pq import ivfpq_topk
     from geostructures_spark.operators.simsearch import ivf_assign
-    m, ksub = 2, 4
+    m, ksub = 8, 16
     vecs = _vecs(spark, data)
     books = pq_train(vecs, m=m, ksub=ksub, n_iter=1)
     enc = pq_encode(vecs, books)
@@ -234,6 +236,10 @@ def test_ivfpq_distributed_matches_broadcast(spark, data):
                   ivfpq_topk(enc, books, inv, cents, q, k=8, n_probe=2,
                              strategy='distributed').collect()])
     assert got == base
+    # the same (query, neighbor) distance as the full ADC scan
+    full = {(r['query_id'], r['neighbor_id']): r['adc_dist'] for r in
+            pq_adc_topk(enc, books, q, k=len(data), strategy='broadcast').collect()}
+    assert base and all(d == full[(qid, nid)] for qid, nid, d, _ in base)
 
 
 def test_adc_strategy_validation(spark, data):

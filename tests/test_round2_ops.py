@@ -267,6 +267,17 @@ def test_spatial_join_salted_matches_unsalted(spark):
     assert salted == base
 
 
+def _broadcast_inputs(df):
+    """Input columns of each BroadcastExchange in the plan as built. Call it
+    before the first action: an executed adaptive plan prints its final
+    form, where AQE may have turned small shuffle joins into broadcasts."""
+    import re
+    mode = df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode
+    plan = df._jdf.queryExecution().explainString(mode.fromString('formatted'))
+    return re.findall(r'^\(\d+\) BroadcastExchange\nInput \[\d+\]: \[([^\]]*)\]',
+                      plan, flags=re.M)
+
+
 def test_shape_join_spec_path_matches_broadcast(spark, monkeypatch):
     from geostructures_spark.operators import shape_join as sj
     from geostructures_spark.operators import spatial_join as spj
@@ -276,11 +287,17 @@ def test_shape_join_spec_path_matches_broadcast(spark, monkeypatch):
         'named_struct("center_lon", params.center_lon + 3.0, '
         '"center_lat", params.center_lat, "radius", 700000.0D) AS params',
         'rings', 'dt_start', 'dt_end')
-    base = {(r.a_id, r.b_id) for r in
-            sj.shape_join(shapes, other, length=3, time_gated=False).collect()}
+    # within the budget both spec sides broadcast; the lowered budget
+    # plans them as shuffle joins
+    spec_sides = lambda df: sorted(s for cols in _broadcast_inputs(df)
+                                   for s in ('_spec_a', '_spec_b') if s in cols)
+    within = sj.shape_join(shapes, other, length=3, time_gated=False)
+    assert spec_sides(within) == ['_spec_a', '_spec_b']
+    base = {(r.a_id, r.b_id) for r in within.collect()}
     monkeypatch.setattr(spj, '_BROADCAST_MAX_SHAPES', 0)
-    spec = {(r.a_id, r.b_id) for r in
-            sj.shape_join(shapes, other, length=3, time_gated=False).collect()}
+    forced = sj.shape_join(shapes, other, length=3, time_gated=False)
+    assert spec_sides(forced) == []
+    spec = {(r.a_id, r.b_id) for r in forced.collect()}
     assert len(base) > 0
     assert spec == base
 

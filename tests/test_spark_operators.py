@@ -88,6 +88,21 @@ def test_pages_extraction_byte_identical(spark):
     assert len(a) > 100
 
 
+def test_miner_page_points_do_not_depend_on_batch_neighbours():
+    # 'coords@lonlat: 1' + '0.5, 2' reads as one mention across the row
+    # boundary, so both rows are rescanned on their own; the rescan must
+    # match ASCII digits only, as the batch scan does
+    import pyarrow as pa
+    from geostructures_spark.operators.miner import _mine_arrow_batch
+    for page, want in (('0.5, 2 and coords@lonlat: ٣٤, ٥', []),
+                       ('0.5, 2 and coords@lonlat: 34, 5', [(34.0, 5.0)])):
+        for batch, row in (([page], 0), (['coords@lonlat: 1', page], 1)):
+            row_idx, point_idx, lon, lat, _ = _mine_arrow_batch(pa.array(batch))
+            assert list(row_idx) == [row] * len(want), batch
+            assert list(point_idx) == list(range(len(want))), batch
+            assert list(zip(lon, lat)) == want, batch
+
+
 def test_spatial_join_matches_brute_force(spark):
     # cell-join + exact kernel == brute-force haversine filter
     from geostructures_spark.operators.miner import mine_points
@@ -231,17 +246,34 @@ def test_wkt_geojson_interchange(spark):
 
 def test_shape_join_matches_kernel_brute_force(spark):
     from geostructures_spark.operators.shape_join import shape_join
-    from geostructures_spark.operators.tiling import shape_row_to_kernel
+    from geostructures_spark.operators.tiling import (
+        SHAPES_SCHEMA_DDL, shape_row_to_kernel)
     from geostructures_spark.sources.shapes import shapes_df
     from geostructures_spark.kernels import shapes as shp
-    a = shapes_df(spark, 60, seed=42).cache()
-    b = shapes_df(spark, 200, seed=9).filter('shape_id < 4').cache()
-    got = {(r.a_id, r.b_id) for r in
-           shape_join(a, b, predicate='intersects', time_gated=False).collect()}
+
+    def edge_circles(id0):
+        # two circles across the antimeridian, one near each pole
+        circles = [(179.5, 10.0, 300_000.0), (-179.8, 10.5, 200_000.0),
+                   (30.0, 86.0, 500_000.0), (0.0, -88.0, 400_000.0)]
+        return spark.createDataFrame(
+            [(id0 + i, 'circle', {'center_lon': lon, 'center_lat': lat, 'radius': r},
+              None, None, None, None) for i, (lon, lat, r) in enumerate(circles)],
+            SHAPES_SCHEMA_DDL)
+
+    # length 5: the Python cover of a 500 km polar circle takes ~10 s at 6
+    a = shapes_df(spark, 60, seed=42).unionByName(edge_circles(1000)).cache()
+    b = shapes_df(spark, 200, seed=9).filter('shape_id < 4') \
+        .unionByName(edge_circles(2000)).cache()
     ca = {r['shape_id']: shape_row_to_kernel(r.asDict(recursive=True)) for r in a.collect()}
     cb = {r['shape_id']: shape_row_to_kernel(r.asDict(recursive=True)) for r in b.collect()}
-    brute = {(x, y) for x in ca for y in cb if shp.shapes_intersect(ca[x], cb[y])}
-    assert got == brute
+    for predicate, kernel in (('intersects', shp.shapes_intersect),
+                              ('contains', shp.shape_contains_shape)):
+        got = {(r.a_id, r.b_id) for r in
+               shape_join(a, b, predicate=predicate, length=5,
+                          time_gated=False).collect()}
+        brute = {(x, y) for x in ca for y in cb if kernel(ca[x], cb[y])}
+        assert got == brute, predicate
+        assert {(x, y) for x, y in brute if x >= 1000 and y >= 2000}, predicate
 
 
 def test_shape_join_contains(spark):
