@@ -36,7 +36,7 @@ from geostructures_spark.kernels import shapes as shp
 from geostructures_spark.operators import spatial_join as spj
 from geostructures_spark.operators.tiling import cover_shapes, shape_row_to_kernel
 
-__all__ = ['shape_join', 'filter_shapes_by_probe']
+__all__ = ['shape_join']
 
 
 def shape_join(shapes_a: DataFrame, shapes_b: DataFrame,
@@ -106,19 +106,3 @@ def shape_join(shapes_a: DataFrame, shapes_b: DataFrame,
     return (cand.filter(_pred(F.col('a_id'), F.col('_spec_a'),
                               F.col('b_id'), F.col('_spec_b')))
             .select('a_id', 'b_id'))
-
-
-def filter_shapes_by_probe(shapes: DataFrame, probe: DataFrame,
-                           predicate: str = 'intersects', **kwargs) -> DataFrame:
-    """filter_by_intersection / filter_contained_by with a broadcastable
-    probe set: keeps shapes related to ANY probe (left-semi)."""
-    if predicate == 'contained_by':
-        pairs = shape_join(probe, shapes, predicate='contains', **kwargs) \
-            .select(F.col('b_id').alias('shape_id'))
-    elif predicate == 'contains':
-        pairs = shape_join(shapes, probe, predicate='contains', **kwargs) \
-            .select(F.col('a_id').alias('shape_id'))
-    else:
-        pairs = shape_join(shapes, probe, predicate='intersects', **kwargs) \
-            .select(F.col('a_id').alias('shape_id'))
-    return shapes.join(pairs.distinct(), 'shape_id', 'left_semi')

@@ -80,7 +80,11 @@ def with_track_diffs(tracks: DataFrame, entity_col: str = 'entity',
     prev_lat = F.lag(lat_col).over(w)
     prev_t = F.lag(time_col).over(w)
     dist = haversine_expr(prev_lon, prev_lat, F.col(lon_col), F.col(lat_col))
-    dt_sec = (F.unix_timestamp(F.col(time_col)) - F.unix_timestamp(prev_t)).cast('double')
+    # microsecond-exact, as the oracle's epoch_us difference, so sub-second
+    # pings and segments near a speed threshold count as the oracle counts
+    # them (unix_micros takes TIMESTAMP, not TIMESTAMP_NTZ)
+    t_us, prev_us = (F.unix_micros(c.cast('timestamp')) for c in (F.col(time_col), prev_t))
+    dt_sec = (t_us - prev_us) / 1e6
     # IEEE division semantics under ANSI mode: 0/0 -> NaN, x/0 -> inf
     # (mirrors the reference's NumPy array division, collections.py:841-849);
     # first ping per entity stays NULL (lag is NULL)

@@ -47,6 +47,26 @@ def test_track_distances_golden(spark):
     assert list(got) == [157.241] * 7
 
 
+def test_track_diffs_sub_second(spark):
+    # dt_sec is the microsecond difference, as the track_speed_stats oracle
+    # computes it ((epoch_us(ts) - epoch_us(prev_ts)) / 1e6): 'a' pings are
+    # 0.5 s apart; 'b' straddles a whole second, 0.2 s apart and ~334 m
+    # moved, fast at 1 km/s (a whole-second diff reads 1 s: not fast)
+    rows = [('a', (2020, 1, 1, 0, 0, 0), 0.0, 0.0),
+            ('a', (2020, 1, 1, 0, 0, 0, 500000), 0.0, 0.001),
+            ('b', (2020, 1, 1, 0, 0, 0, 900000), 0.0, 0.0),
+            ('b', (2020, 1, 1, 0, 0, 1, 100000), 0.0, 0.003)]
+    from geostructures_spark.operators.tracks import with_track_diffs
+    out = {r.entity: r for r in (with_track_diffs(_pings(spark, rows))
+                                 .filter(F.col('dt_sec').isNotNull()).collect())}
+    assert out['a'].dt_sec == 0.5
+    assert out['b'].dt_sec == 200000 / 1e6
+    oracle_fast = out['b'].dist_m > (200000 / 1e6) * 1000.0
+    assert oracle_fast
+    assert (out['b'].dist_m > out['b'].dt_sec * 1000.0) == oracle_fast
+    assert out['b'].speed_mps == out['b'].dist_m / 0.2
+
+
 def test_impossible_journeys_golden(spark):
     # tests/test_collections.py:1067-1083
     rows = [
