@@ -37,9 +37,32 @@ TABLES = ['region', 'nation', 'customer', 'supplier', 'part', 'orders',
           'lineitem', 'events', 'documents', 'embeddings']
 
 
+# The schema of every table `_load` reads, as Spark reads the Parquet footers
+# of the test tables at every scale (TESTDATA.md). Given up front, a read
+# plans with no Spark job; inferring it ran one job per table and query.
+# tests/test_warm_queries.py compares each row with the files.
+_TABLE_SCHEMAS = {
+    'region': 'r_regionkey INT, r_name STRING',
+    'nation': 'n_nationkey INT, n_name STRING, n_regionkey INT',
+    'customer': ('c_custkey BIGINT, c_name STRING, c_nationkey INT, c_acctbal DOUBLE, '
+                 'c_mktsegment STRING'),
+    'supplier': 's_suppkey BIGINT, s_name STRING, s_nationkey INT, s_acctbal DOUBLE',
+    'orders': ('o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, '
+               'o_totalprice DOUBLE, o_orderdate TIMESTAMP_NTZ, o_orderpriority STRING'),
+    'lineitem': ('l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, l_linenumber INT, '
+                 'l_quantity DOUBLE, l_extendedprice DOUBLE, l_discount DOUBLE, l_tax DOUBLE, '
+                 'l_returnflag STRING, l_linestatus STRING, l_shipdate TIMESTAMP_NTZ'),
+    'events': ('event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, event_type STRING, '
+               'value DOUBLE, props STRING'),
+    'documents': 'doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT',
+    'embeddings': 'vec_id BIGINT, embedding ARRAY<FLOAT>, label INT',
+}
+
+
 def _load(spark: SparkSession, sf_dir: str, *names: str) -> None:
     for n in names:
-        spark.read.parquet(os.path.join(sf_dir, f'{n}.parquet')).createOrReplaceTempView(n)
+        (spark.read.schema(_TABLE_SCHEMAS[n]).parquet(os.path.join(sf_dir, f'{n}.parquet'))
+         .createOrReplaceTempView(n))
 
 
 # --- shared derivation expressions (valid in Spark SQL *and* DuckDB) -------

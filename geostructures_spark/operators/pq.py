@@ -208,6 +208,15 @@ def _adc_sum(lut: np.ndarray, codes_m: np.ndarray) -> np.ndarray:
     return d
 
 
+def _more_rows_than(df: DataFrame, n: int) -> bool:
+    """Bounded probe (ADVICE r5): stops the scan at n + 1 rows instead of
+    counting the full (possibly unmaterialized) lineage."""
+    # take, not limit(n + 1).count(): a codegen'd limit names its counter
+    # from a JVM-wide sequence, so its class never hits the codegen cache
+    # and every call compiles it again
+    return len(df.select(F.lit(1)).take(n + 1)) > n
+
+
 def pq_adc_topk(codes: DataFrame, codebooks: DataFrame, queries: DataFrame,
                 k: int, id_col: str = 'vec_id', codes_col: str = 'codes',
                 q_id: str = 'query_id', q_vec: str = 'q_embedding',
@@ -234,11 +243,8 @@ def pq_adc_topk(codes: DataFrame, codebooks: DataFrame, queries: DataFrame,
     if strategy not in ('auto', 'broadcast', 'distributed'):
         raise ValueError(f'unknown strategy: {strategy!r}')
     if strategy == 'auto':
-        # bounded probe (ADVICE r5): limit(threshold+1).count() stops the
-        # scan as soon as the threshold is exceeded instead of counting the
-        # full (possibly unmaterialized) query lineage
-        probe = queries.limit(big_q_threshold + 1).count()
-        strategy = 'distributed' if probe > big_q_threshold else 'broadcast'
+        big_q = _more_rows_than(queries, big_q_threshold)
+        strategy = 'distributed' if big_q else 'broadcast'
     if strategy == 'distributed':
         return pq_adc_topk_bigq(codes, codebooks, queries, k,
                                 id_col=id_col, codes_col=codes_col,
@@ -534,11 +540,8 @@ def ivfpq_topk(codes: DataFrame, codebooks: DataFrame, inverted: DataFrame,
     if strategy not in ('auto', 'broadcast', 'distributed'):
         raise ValueError(f'unknown strategy: {strategy!r}')
     if strategy == 'auto':
-        # bounded probe (ADVICE r5): limit(threshold+1).count() stops the
-        # scan as soon as the threshold is exceeded instead of counting the
-        # full (possibly unmaterialized) query lineage
-        probe = queries.limit(big_q_threshold + 1).count()
-        strategy = 'distributed' if probe > big_q_threshold else 'broadcast'
+        big_q = _more_rows_than(queries, big_q_threshold)
+        strategy = 'distributed' if big_q else 'broadcast'
 
     q_probe = (ivf_assign(queries, centroids, id_col=q_id, vec_col=q_vec,
                           c_id=c_id, c_vec=c_vec, n_assign=n_probe)

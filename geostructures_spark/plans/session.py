@@ -15,6 +15,19 @@ __all__ = ['get_session', 'DEFAULT_SHUFFLE_PARTITIONS']
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get('SPARK_GRAFT_SHUFFLE', '32'))
 
+# Whole-stage codegen keeps compiled classes in an LRU keyed by the generated
+# source text; Spark's default holds 100. The 12 headline queries generate
+# 166 classes and the 129-query registry about 1,300, so with the default a
+# warm pass evicted what the next query needed and recompiled 111-171
+# classes (Janino, then the JIT again on the new bytecode). 2,048 holds the
+# registry's working set; it is a static conf, fixed when the JVM starts.
+# By default each class is named after its whole-stage codegen stage id.
+# Under AQE that id follows the order in which a query's stages finish, so
+# a warm run of bm25_topk, ngram_jaccard_pairs or dsir_logweights could
+# name an identical class differently and compile it again (2-14 classes a
+# run); `useIdInClassName=false` keeps the source, and so the key, stable.
+CODEGEN_CACHE_MAX_ENTRIES = 2048
+
 
 def get_session(app: str = 'geostructures_spark',
                 cores: str | int | None = None,
@@ -33,6 +46,8 @@ def get_session(app: str = 'geostructures_spark',
         .appName(app)
         .config('spark.sql.shuffle.partitions', str(shuffle))
         .config('spark.sql.session.timeZone', 'UTC')
+        .config('spark.sql.codegen.cache.maxEntries', str(CODEGEN_CACHE_MAX_ENTRIES))
+        .config('spark.sql.codegen.useIdInClassName', 'false')
         # AQE: runtime re-plan, partition coalescing, skew-join splitting —
         # the backstop for hot-cell skew on top of explicit salting
         .config('spark.sql.adaptive.enabled', 'true')

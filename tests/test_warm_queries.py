@@ -1,0 +1,119 @@
+"""A warm query reuses what the previous run of the same query produced:
+``_load`` takes each table's schema from ``_TABLE_SCHEMAS`` (no inference
+job), and the session's codegen cache holds every class the headline
+queries generate (no recompile). Also pins how many jobs each headline
+query runs while its DataFrame is built."""
+
+import os
+from contextlib import contextmanager
+
+import pytest
+from pyspark.sql.types import StructType
+
+import __spark_entry__ as em
+from bench import HEADLINE
+from geostructures_spark.plans.session import get_session
+from perfbench.workloads import DATA_DIR as SF001  # the sf0.01 tables the headline reads
+
+TESTDATA = '/root/testdata'  # TESTDATA.md
+SCALES = {sf: os.path.join(TESTDATA, sf) for sf in ('sf0.001', 'sf0.01', 'sf0.1')}
+SCALES['perfbench-sf0.01'] = SF001
+
+# Jobs a warm headline query runs while its DataFrame is built, at sf0.01.
+BUILD_JOB_BUDGET = {
+    'q1_pricing_summary': 0,
+    'niemeyer_cell_counts': 0,
+    'h3_cell_counts': 0,
+    'pip_triangle_counts': 0,
+    # spatial_join_points' `_catalog_size` agg (broadcast, kernel and cover
+    # levels); AQE runs it as a shuffle-map job and a result job
+    'spatial_join_circles': 2,
+    'knn_topk': 0,
+    'track_speed_stats': 0,
+    'minhash_lsh_pairs': 0,
+    'simhash_buckets': 0,
+    'text_stats': 0,
+    # cosine_topk_ivf collects the centroids to the driver
+    'cosine_topk': 1,
+    'events_windowed_agg': 0,
+}
+
+
+@pytest.fixture(scope='module')
+def spark():
+    return get_session(app='tests', cores=4, shuffle_partitions=8)
+
+
+@contextmanager
+def _job_group(spark, group: str):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty('spark.jobGroup.id', None)
+        sc.setLocalProperty('spark.job.description', None)
+
+
+def _jobs_in_group(spark, group: str) -> int:
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts reach the tracker through it
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize('sf_dir', SCALES.values(), ids=SCALES.keys())
+def test_schema_table_matches_the_files(spark, sf_dir):
+    if not os.path.isdir(sf_dir):
+        pytest.skip(f'{sf_dir} is absent')
+    names = [n for n in em._TABLE_SCHEMAS if os.path.exists(os.path.join(sf_dir, f'{n}.parquet'))]
+    assert names
+    for n in names:
+        inferred = spark.read.parquet(os.path.join(sf_dir, f'{n}.parquet')).schema
+        assert StructType.fromDDL(em._TABLE_SCHEMAS[n]) == inferred, n
+
+
+def test_load_runs_no_job(spark):
+    names = [n for n in em._TABLE_SCHEMAS if os.path.exists(os.path.join(SF001, f'{n}.parquet'))]
+    with _job_group(spark, 'test_load_runs_no_job'):
+        em._load(spark, SF001, *names)
+    assert _jobs_in_group(spark, 'test_load_runs_no_job') == 0
+    for n in names:
+        assert spark.table(n).schema == StructType.fromDDL(em._TABLE_SCHEMAS[n])
+
+
+def test_unknown_table_raises(spark):
+    with pytest.raises(KeyError):
+        em._load(spark, SF001, 'part')
+
+
+@pytest.fixture(scope='module')
+def headline_passes(spark):
+    """Two passes over the headline queries at sf0.01. Per pass and query:
+    the jobs its DataFrame build ran, and the Janino compiles of the build
+    and the collect."""
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    queries = em.queries()
+    passes = []
+    for p in range(2):
+        build_jobs, compiled = {}, {}
+        for name in HEADLINE:
+            group = f'headline-{p}-{name}'
+            c0 = compiles.getCount()
+            with _job_group(spark, group):
+                df = queries[name](spark, SF001)
+            df.collect()
+            compiled[name] = compiles.getCount() - c0
+            build_jobs[name] = _jobs_in_group(spark, group)
+        passes.append((build_jobs, compiled))
+    assert compiles.getCount() > 0
+    return passes
+
+
+def test_warm_rerun_compiles_no_code(headline_passes):
+    _, compiled = headline_passes[1]
+    assert compiled == dict.fromkeys(HEADLINE, 0)
+
+
+def test_headline_build_job_budget(headline_passes):
+    build_jobs, _ = headline_passes[1]
+    assert build_jobs == BUILD_JOB_BUDGET
