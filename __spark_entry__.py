@@ -1902,8 +1902,7 @@ def _q_shape_join(spark: SparkSession, sf_dir: str) -> DataFrame:
              ((r_regionkey * 104729) % 360000) / 1000.0e0 - 180.0e0 + 0.000123e0 AS lon,
              ((r_regionkey * 7919) % 170000) / 1000.0e0 - 85.0e0 + 0.000321e0 AS lat
       FROM region""", '400000.0 + (shape_id * 29 % 5) * 100000.0')
-    pairs = shape_join(a, b, predicate='intersects', length=4, base=16,
-                       time_gated=False)
+    pairs = shape_join(a, b, predicate='intersects', length=4, time_gated=False)
     return pairs.select(F.col('a_id').cast('long').alias('a_id'),
                         F.col('b_id').cast('long').alias('b_id'))                 .orderBy('a_id', 'b_id')
 

@@ -2,11 +2,13 @@
 
 The distributed form of the reference's collection filters
 (filter_by_intersection :119-131, filter_contained_by :133-145,
-filter_contains :147-159, intersects :433-458 in collections.py):
+filter_contains :147-159, intersects :433-458 in collections.py), on the
+spatial join's JVM window cover (operators/spatial_join.py):
 
-  covers_a = cover_shapes(A)         (exploded cell covers)
-  covers_b = cover_shapes(B)
-  candidates = covers_a ⋈ covers_b ON cell  (distinct id pairs)
+  level      = the coarsest _lvl either side's window uses (one
+               _catalog_size agg over both, which also sizes the budget)
+  covers     = _window_cover(_with_window(side), floor=level)
+  candidates = covers_a ⋈ covers_b ON cell  (packed BIGINT; distinct ids)
   sides      = (id, dt_start, dt_end, JSON spec) per shape, joined onto
                the candidates by id (broadcast within the spatial join's
                budget, shuffled beyond it)
@@ -14,10 +16,10 @@ filter_contains :147-159, intersects :433-458 in collections.py):
   exact      = shapes_intersect / shape_contains_shape kernels per pair,
                each kernel built once per Arrow batch from its spec
 
-Shape geometries never reach the driver: they ride the id joins as JSON
-specs. Candidate pairs only exist where covers overlap — the cell join is
-the pruning structure (replacing the reference's per-pair sweep line at
-cluster scale).
+A window holds every cell with a point of its shape, so two shapes sharing
+a point share a cell at one common level: the cell join is a superset
+filter, and the refine makes it exact. Shape geometries never reach the
+driver: they ride the id joins as JSON specs.
 """
 
 from __future__ import annotations
@@ -34,15 +36,13 @@ from geostructures_spark.functions.geo import (
 )
 from geostructures_spark.kernels import shapes as shp
 from geostructures_spark.operators import spatial_join as spj
-from geostructures_spark.operators.tiling import cover_shapes, shape_row_to_kernel
+from geostructures_spark.operators.tiling import shape_row_to_kernel
 
 __all__ = ['shape_join']
 
 
 def shape_join(shapes_a: DataFrame, shapes_b: DataFrame,
-               predicate: str = 'intersects',
-               length: int = 6, base: int = 16,
-               scheme: str = 'niemeyer', resolution: int = 7,
+               predicate: str = 'intersects', length: int = 6,
                time_gated: bool = True) -> DataFrame:
     """Pairs (a_id, b_id) where predicate(A, B) holds.
 
@@ -54,25 +54,27 @@ def shape_join(shapes_a: DataFrame, shapes_b: DataFrame,
     """
     if predicate not in ('intersects', 'contains'):
         raise ValueError(predicate)
+    if not 1 <= length <= 15:
+        raise ValueError('shape_join supports length 1..15')
     test = shp.shapes_intersect if predicate == 'intersects' else shp.shape_contains_shape
 
+    win_a, win_b = spj._with_window(shapes_a, length), spj._with_window(shapes_b, length)
     # the budget is read here, at call time, so callers can lower it
-    na, va = spj._catalog_size(shapes_a)[:2]
-    nb, vb = spj._catalog_size(shapes_b)[:2]
-    hint = F.broadcast if (na + nb <= spj._BROADCAST_MAX_SHAPES and
-                           va + vb <= spj._BROADCAST_MAX_RING_VERTS) else (lambda df: df)
+    n, verts, _, levels = spj._catalog_size(win_a, win_b)
+    hint = F.broadcast if (n <= spj._BROADCAST_MAX_SHAPES and
+                           verts <= spj._BROADCAST_MAX_RING_VERTS) else (lambda df: df)
+    floor = max(levels, default=0)
 
-    def side(shapes: DataFrame, n: int, s: str):
-        covers = cover_shapes(shapes, length, base, scheme, resolution,
-                              n_partitions=min(64, max(4, n // 25 + 1)))
+    def side(shapes: DataFrame, windowed: DataFrame, s: str):
+        covers = spj._window_cover(windowed, length, floor)
         rel = shapes.select(F.col('shape_id').alias(f'{s}_id'),
                             F.col('dt_start').alias(f'{s}_start'),
                             F.col('dt_end').alias(f'{s}_end'),
                             spj._shape_spec_col(shapes).alias(f'_spec_{s}'))
         return covers.withColumnRenamed('shape_id', f'{s}_id'), hint(rel)
 
-    cov_a, rel_a = side(shapes_a, na, 'a')
-    cov_b, rel_b = side(shapes_b, nb, 'b')
+    cov_a, rel_a = side(shapes_a, win_a, 'a')
+    cov_b, rel_b = side(shapes_b, win_b, 'b')
     cand = (cov_a.join(cov_b, 'cell').select('a_id', 'b_id').distinct()
             .join(rel_a, 'a_id').join(rel_b, 'b_id'))
 

@@ -36,6 +36,7 @@ Scale notes:
 
 from __future__ import annotations
 
+from functools import reduce
 from typing import List, Tuple
 
 import numpy as np
@@ -69,21 +70,19 @@ def _plain_circle_sql(p) -> str:
             f'coalesce(size(rings), 0) <= 0)')
 
 
-def _catalog_size(shapes: DataFrame, length: int = None):
-    """(n_shapes, total ring vertices, n_plain_circles, levels) — ONE cheap
-    agg over the catalog side deciding broadcast vs shuffle execution, the
-    all-circle JVM exact predicate (plain circle = no holes, radius set),
-    and, when ``length`` is given, the sorted distinct cover levels
-    (``_lvl`` of _window_cols; empty otherwise). ``shapes`` may already
-    carry its window columns, see _with_window."""
-    p = _params_sql(shapes)
-    if length is not None and '_lvl' not in shapes.columns:
-        shapes = _with_window(shapes, length)
-    row = shapes.selectExpr(
+def _catalog_size(*windowed: DataFrame):
+    """(n_shapes, total ring vertices, n_plain_circles, levels) of catalogs
+    that carry their window columns (_with_window) — ONE cheap agg over the
+    union of their narrow projections deciding broadcast vs shuffle
+    execution, the all-circle JVM exact predicate (plain circle = no holes,
+    radius set) and the sorted distinct cover levels (``_lvl``)."""
+    row = reduce(DataFrame.union, (
+        w.selectExpr('kind', f"{_params_sql(w)('radius')} AS radius", 'rings', '_lvl')
+        for w in windowed)).selectExpr(
         'count(*) AS n',
         'coalesce(sum(aggregate(rings, 0, (acc, ring) -> acc + size(ring))), 0) AS verts',
-        f'coalesce(sum(CAST({_plain_circle_sql(p)} AS INT)), 0) AS plain',
-        f"{'collect_set(_lvl)' if length is not None else 'array()'} AS levels",
+        f'coalesce(sum(CAST({_plain_circle_sql(lambda f: f)} AS INT)), 0) AS plain',
+        'collect_set(_lvl) AS levels',
     ).collect()[0]
     return (int(row['n']), int(row['verts']), int(row['plain']),
             sorted(int(d) for d in row['levels']))
@@ -334,7 +333,7 @@ def spatial_join_points(
         raise ValueError('spatial_join_points supports length 1..15')
     spark = points.sparkSession
     windowed = _with_window(shapes, length)
-    n_shapes, n_verts, n_plain, levels = _catalog_size(windowed, length)
+    n_shapes, n_verts, n_plain, levels = _catalog_size(windowed)
     use_broadcast = (n_shapes <= max_broadcast_shapes and
                      n_verts <= max_broadcast_ring_verts)
     all_plain_circles = n_shapes > 0 and n_plain == n_shapes

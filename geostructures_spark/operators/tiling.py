@@ -139,10 +139,8 @@ def cover_shapes(shapes: DataFrame, length: int = 8, base: int = 16,
     The hash_shape cover keeps the cells whose box intersects the shape's
     discretized outline, so it can omit an edge cell that still holds a
     matching point (e.g. cells of the row a box's top edge runs through):
-    it is not a safe candidate filter for points, and the spatial join
-    covers every shape with its JVM window instead. shape_join pairs the
-    shapes whose covers share a cell and refines each pair with the exact
-    kernels over the two shapes' JSON specs."""
+    it is not a safe candidate filter, and both joins cover every shape
+    with its JVM window instead."""
     from geostructures_spark.kernels import tiling_niemeyer as tn
     from geostructures_spark.kernels import h3_cover as hc
     from geostructures_spark.operators.ringio import (

@@ -115,7 +115,8 @@ def main() -> int:
           f'_spec through a broadcast shape_id join')
     ok &= spec_bc
 
-    # shape-vs-shape join: one spec UDF refines every pair, each side's
+    # shape-vs-shape join: both sides cover in the JVM window (no Python
+    # cover stage), one spec UDF refines every pair, each side's
     # (id, dt, _spec) relation joined once by id — broadcast within the
     # budget, shuffled beyond it. Spark's own size-based broadcast is off
     # here, so only the operator's hints can broadcast.
@@ -136,6 +137,8 @@ def main() -> int:
             good = (not bc_specs and '_spec_a' in plan and '_spec_b' in plan
                     and 'SortMergeJoin' in plan)
             what = 'budget 0: spec sides planned as shuffle joins'
+        good &= 'MapInPandas' not in plan
+        what += ', no MapInPandas cover'
         print(f'[{"OK" if good else "FAIL"}] shape_join {what}')
         ok &= good
     spj._BROADCAST_MAX_SHAPES = budget

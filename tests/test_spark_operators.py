@@ -280,7 +280,6 @@ def test_shape_join_matches_kernel_brute_force(spark):
               None, None, None, None) for i, (lon, lat, r) in enumerate(circles)],
             SHAPES_SCHEMA_DDL)
 
-    # length 5: the Python cover of a 500 km polar circle takes ~10 s at 6
     a = shapes_df(spark, 60, seed=42).unionByName(edge_circles(1000)).cache()
     b = shapes_df(spark, 200, seed=9).filter('shape_id < 4') \
         .unionByName(edge_circles(2000)).cache()
@@ -289,8 +288,7 @@ def test_shape_join_matches_kernel_brute_force(spark):
     for predicate, kernel in (('intersects', shp.shapes_intersect),
                               ('contains', shp.shape_contains_shape)):
         got = {(r.a_id, r.b_id) for r in
-               shape_join(a, b, predicate=predicate, length=5,
-                          time_gated=False).collect()}
+               shape_join(a, b, predicate=predicate, time_gated=False).collect()}
         brute = {(x, y) for x in ca for y in cb if kernel(ca[x], cb[y])}
         assert got == brute, predicate
         assert {(x, y) for x, y in brute if x >= 1000 and y >= 2000}, predicate
@@ -315,6 +313,35 @@ def test_shape_join_contains(spark):
     got = {(r.a_id, r.b_id) for r in
            shape_join(big, small, predicate='contains', time_gated=False).collect()}
     assert got == {(1, 10)}
+    # the packed key's level tag needs length <= 15
+    for length in (0, 16):
+        with pytest.raises(ValueError, match='length 1..15'):
+            shape_join(big, small, predicate='contains', length=length)
+
+
+def test_shape_join_finds_pair_in_an_edge_cell(spark):
+    """Box B lies in the cell row that box A's top edge runs through. A
+    hash_shape cover of A omits that row (it keeps the cells whose box
+    meets A's discretized outline), so a cover join on it finds no pair at
+    length 6; the window cover holds every cell with a point of A."""
+    from geostructures_spark.kernels import shapes as shp
+    from geostructures_spark.operators.shape_join import shape_join
+    from geostructures_spark.operators.tiling import (
+        SHAPES_SCHEMA_DDL, shape_row_to_kernel)
+    from geostructures_spark.sources.shapes import shapes_df
+    a = shapes_df(spark, 120, seed=10002).filter('shape_id = 0').cache()
+    b = spark.createDataFrame(
+        [(1, 'box', {'min_lon': -74.2588, 'min_lat': 40.5186,
+                     'max_lon': -74.1885, 'max_lat': 40.5272}, None, None, None, None)],
+        SHAPES_SCHEMA_DDL)
+    ka, kb = (shape_row_to_kernel(df.collect()[0].asDict(recursive=True)) for df in (a, b))
+    assert ka['kind'] == 'box'
+    for predicate, kernel in (('intersects', shp.shapes_intersect),
+                              ('contains', shp.shape_contains_shape)):
+        assert kernel(ka, kb), predicate
+        got = [tuple(r) for r in shape_join(a, b, predicate=predicate).collect()]
+        assert got == [(0, 1)], predicate
+    a.unpersist()
 
 
 def test_karney_udfs_match_kernel(spark):

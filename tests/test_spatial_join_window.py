@@ -175,11 +175,11 @@ def test_over_budget_window_covers_at_a_coarser_level(spark):
     window budget: it covers one level up, next to a box at level 0, with
     no Python cover stage, and the join stays exact."""
     from geostructures_spark.operators.spatial_join import (
-        _catalog_size, spatial_join_points)
+        _catalog_size, _with_window, spatial_join_points)
     shapes = _shapes_df(spark, [
         _shape(1, 'polygon', rings=[_ring((0, 10), (20, 10), (20, 30), (0, 30), (0, 10))]),
         _shape(2, 'box', min_lon=5.0, min_lat=15.0, max_lon=9.0, max_lat=18.0)])
-    assert _catalog_size(shapes, 6)[3] == [0, 1]
+    assert _catalog_size(_with_window(shapes, 6))[3] == [0, 1]
     points = _uniform_points(spark, 3000, (-2, 22), (8, 32))
     joined = spatial_join_points(points, shapes, length=6, time_gated=False)
     plan = joined._jdf.queryExecution().executedPlan().toString()
@@ -198,11 +198,11 @@ def test_level_tag_keeps_coinciding_indexes_apart(spark):
     would equal one of the circle's parent keys and the pair would join
     twice. The level tag keeps each pair to one row."""
     from geostructures_spark.operators.spatial_join import (
-        _catalog_size, spatial_join_points)
+        _catalog_size, _with_window, spatial_join_points)
     shapes = _shapes_df(spark, [
         _shape(1, 'circle', center_lon=0.0, center_lat=-89.0, radius=300_000.0),
         _shape(2, 'box', min_lon=-170.0, min_lat=-89.5, max_lon=-160.0, max_lat=-89.0)])
-    assert _catalog_size(shapes, 6)[3] == [0, 1]
+    assert _catalog_size(_with_window(shapes, 6))[3] == [0, 1]
     points = _uniform_points(spark, 3000, (-180, -90), (-90, -88.5))
     joined = spatial_join_points(points, shapes, length=6, time_gated=False)
     got = Counter((r.shape_id, r.url, r.point_idx) for r in
