@@ -4212,7 +4212,7 @@ def _tm_grid_duckdb(code: str, pts_sql: str) -> str:
     wa, we2 = D.WGS84.a, D.WGS84.e2
     aa, ae2 = g.ell.a, g.ell.e2
     ae = float(np.sqrt(ae2))
-    m0 = D._meridian_arc(g.ell, g.tm.lat0)
+    m0 = D._origin_arc(g.ell, g.tm)
     atanh = lambda x: f'(0.5e0 * ln((1.0e0 + {x}) / (1.0e0 - {x})))'
     sinh = lambda x: f'((exp({x}) - exp(-({x}))) / 2.0e0)'
     cosh = lambda x: f'((exp({x}) + exp(-({x}))) / 2.0e0)'

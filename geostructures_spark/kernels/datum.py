@@ -28,7 +28,7 @@ formulas, and are out of scope here by design.
 
 from __future__ import annotations
 
-from typing import Dict, NamedTuple, Tuple
+from typing import Dict, NamedTuple, Optional, Tuple
 
 import numpy as np
 
@@ -184,6 +184,9 @@ class TMParams(NamedTuple):
     k0: float
     x0: float
     y0: float
+    # meridian arc from the equator to lat0 (_meridian_arc), pinned as a
+    # literal where an oracle text embeds it; None derives it per call
+    m0: Optional[float] = None
 
 
 def _meridian_arc(ell: Ellipsoid, lat0: float) -> float:
@@ -202,6 +205,10 @@ def _meridian_arc(ell: Ellipsoid, lat0: float) -> float:
     return float(a1 * xi)
 
 
+def _origin_arc(ell: Ellipsoid, tm: TMParams) -> float:
+    return _meridian_arc(ell, tm.lat0) if tm.m0 is None else tm.m0
+
+
 def tm_forward_ell(lon, lat, ell: Ellipsoid, tm: TMParams):
     """(lon, lat) on ``ell`` -> projected (x, y). Same Krüger machinery as
     kernels/mgrs.py:_tm_forward but parameterized by ellipsoid."""
@@ -218,7 +225,7 @@ def tm_forward_ell(lon, lat, ell: Ellipsoid, tm: TMParams):
     for j in range(6):
         xi = xi + alpha[j] * np.sin(2 * (j + 1) * xi_p) * np.cosh(2 * (j + 1) * eta_p)
         eta = eta + alpha[j] * np.cos(2 * (j + 1) * xi_p) * np.sinh(2 * (j + 1) * eta_p)
-    m0 = _meridian_arc(ell, tm.lat0)
+    m0 = _origin_arc(ell, tm)
     return (tm.x0 + tm.k0 * a1 * eta,
             tm.y0 + tm.k0 * (a1 * xi - m0))
 
@@ -228,7 +235,7 @@ def tm_inverse_ell(x, y, ell: Ellipsoid, tm: TMParams):
     ensure_malloc_tuned()
     a1, _, beta = kruger_coefficients(ell)
     e = np.sqrt(ell.e2)
-    m0 = _meridian_arc(ell, tm.lat0)
+    m0 = _origin_arc(ell, tm)
     xs = (np.asarray(x, dtype=np.float64) - tm.x0) / (tm.k0 * a1)
     ys = (np.asarray(y, dtype=np.float64) - tm.y0 + tm.k0 * m0) / (tm.k0 * a1)
     xi = ys.copy()
@@ -261,6 +268,9 @@ class LCCParams(NamedTuple):
     k0: float     # scale at the standard parallel (1SP only; 1.0 for 2SP)
     x0: float     # false easting, metres
     y0: float     # false northing, metres
+    # (n, aF, rF) as lcc_constants derives them, pinned as literals where
+    # an oracle text embeds them; None derives them per call
+    consts: Optional[Tuple[float, float, float]] = None
 
 
 def _conf_t(e: float, phi):
@@ -279,7 +289,10 @@ def _par_m(e2: float, phi):
 
 
 def lcc_constants(ell: Ellipsoid, p: LCCParams):
-    """(n, aF, rF) with aF = a*k0*F: r(phi) = aF * t^n, rF = r(lat0)."""
+    """(n, aF, rF) with aF = a*k0*F: r(phi) = aF * t^n, rF = r(lat0);
+    ``p.consts`` when the grid pins them."""
+    if p.consts is not None:
+        return p.consts
     e = float(np.sqrt(ell.e2))
     phi1, phi2 = np.radians(p.lat1), np.radians(p.lat2)
     t1, t2 = _conf_t(e, phi1), _conf_t(e, phi2)
@@ -340,6 +353,9 @@ class AlbersParams(NamedTuple):
     lat2: float
     x0: float
     y0: float
+    # (n, C, rho0) as albers_constants derives them, pinned as literals
+    # where an oracle text embeds them; None derives them per call
+    consts: Optional[Tuple[float, float, float]] = None
 
 
 def _auth_q(ell: Ellipsoid, phi):
@@ -353,7 +369,9 @@ def _auth_q(ell: Ellipsoid, phi):
 
 
 def albers_constants(ell: Ellipsoid, p: AlbersParams):
-    """(n, C, rho0)."""
+    """(n, C, rho0); ``p.consts`` when the grid pins them."""
+    if p.consts is not None:
+        return p.consts
     phi1, phi2 = np.radians(p.lat1), np.radians(p.lat2)
     m1, m2 = _par_m(ell.e2, phi1), _par_m(ell.e2, phi2)
     q1, q2 = _auth_q(ell, phi1), _auth_q(ell, phi2)
@@ -403,6 +421,14 @@ def albers_inverse_ell(x, y, ell: Ellipsoid, p: AlbersParams,
 
 
 # --- named national-grid CRSs ------------------------------------------------
+#
+# Where a grid's oracle SQL embeds a derived constant (the OSGB meridian arc,
+# the Lambert-93 and Conus Albers cone constants), the entry carries it as a
+# literal, written with repr() from the derivation above. numpy's transcen-
+# dental functions are dispatched per CPU (SVML under AVX-512), so a value
+# derived at import may differ in the last bit between hosts, and the engine
+# and the oracle must compute from identical doubles on every host.
+# tests/test_pinned_constants.py re-derives each literal.
 
 class GridCRS(NamedTuple):
     ell: Ellipsoid
@@ -424,7 +450,8 @@ GRID_CRS: Dict[str, GridCRS] = {
     # British National Grid (OSGB36, Airy 1830)
     'EPSG:27700': GridCRS(AIRY1830,
                           TMParams(lon0=-2.0, lat0=49.0, k0=0.9996012717,
-                                   x0=400000.0, y0=-100000.0),
+                                   x0=400000.0, y0=-100000.0,
+                                   m0=5429228.601919496),
                           _WGS84_TO_OSGB36),
 }
 # ED50 / UTM zones 28N..38N (International 1924): EPSG:23028-23038
@@ -460,7 +487,10 @@ GRID_CRS.update({
     'EPSG:2154': GridCRS(GRS80,
                          LCCParams(lon0=3.0, lat0=46.5, lat1=44.0,
                                    lat2=49.0, k0=1.0,
-                                   x0=700000.0, y0=6600000.0),
+                                   x0=700000.0, y0=6600000.0,
+                                   consts=(0.7256077650532695,
+                                           11754255.426096002,
+                                           6055612.049875984)),
                          Helmert(0.0, 0.0, 0.0)),
     # NTF (Paris) / Lambert zone II etendu (legacy France-wide grid;
     # Clarke 1880 IGN, 1SP with k0, lon0 = Paris meridian 2deg20'14.025"E
@@ -484,7 +514,10 @@ GRID_CRS.update({
     # accuracy) — the standard CONUS equal-area analysis grid
     'EPSG:5070': GridCRS(GRS80,
                          AlbersParams(lon0=-96.0, lat0=23.0, lat1=29.5,
-                                      lat2=45.5, x0=0.0, y0=0.0),
+                                      lat2=45.5, x0=0.0, y0=0.0,
+                                      consts=(0.6029027690657601,
+                                              1.3491820315609704,
+                                              9928937.004248781)),
                          Helmert(0.0, 0.0, 0.0)),
 })
 

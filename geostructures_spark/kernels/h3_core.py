@@ -166,22 +166,34 @@ def _unit_ijk_to_digit_arr(ijk: np.ndarray) -> np.ndarray:
 
 # --- geo -> face / hex2d (vectorized) --------------------------------------
 
-_FACE_XYZ = None
-_FACE_LAT = None
-_FACE_LON = None
-_FACE_AZ = None
-
-
-def _init_faces():
-    global _FACE_XYZ, _FACE_LAT, _FACE_LON, _FACE_AZ
-    if _FACE_XYZ is None:
-        lats = np.array([c[0] for c in T.FACE_CENTER_GEO])
-        lons = np.array([c[1] for c in T.FACE_CENTER_GEO])
-        _FACE_LAT, _FACE_LON = lats, lons
-        _FACE_XYZ = np.stack([np.cos(lats) * np.cos(lons),
-                              np.cos(lats) * np.sin(lons),
-                              np.sin(lats)], axis=1)
-        _FACE_AZ = np.array(T.FACE_AXES_AZ)
+_FACE_LAT = np.array([c[0] for c in T.FACE_CENTER_GEO])
+_FACE_LON = np.array([c[1] for c in T.FACE_CENTER_GEO])
+_FACE_AZ = np.array(T.FACE_AXES_AZ)
+# Unit vectors of the face centers, (cos lat cos lon, cos lat sin lon,
+# sin lat), written with repr(): numpy's SIMD cos/sin may round the last bit
+# differently on another CPU, and the H3 oracle SQL embeds these doubles.
+_FACE_XYZ = np.array([
+    [0.21993077914045855, 0.6583691780275012, 0.7198475378926175],
+    [-0.21392348345014003, 0.14781718295506904, 0.9656017935214212],
+    [0.10926252787848505, -0.4811951572873199, 0.8697775121287252],
+    [0.742856730158683, -0.3593941678277979, 0.5648005936517013],
+    [0.8112534709140962, 0.34489532376394366, 0.4721387736413907],
+    [-0.1055498149613977, 0.9794457296411406, 0.17188746100093644],
+    [-0.8075407579970086, 0.15335524858987692, 0.5695261994882709],
+    [-0.2846148069787842, -0.8644080972654221, 0.4144792552473549],
+    [0.7405621473854523, -0.6673299564565477, -0.07898376463267545],
+    [0.8512303986474257, 0.4722343788582734, -0.2289137388687832],
+    [-0.7405621473854522, 0.6673299564565478, 0.07898376463267545],
+    [-0.8512303986474258, -0.4722343788582733, 0.2289137388687832],
+    [0.1055498149613976, -0.9794457296411406, -0.17188746100093644],
+    [0.8075407579970086, -0.15335524858987692, -0.5695261994882709],
+    [0.2846148069787841, 0.8644080972654222, -0.4144792552473549],
+    [-0.7428567301586829, 0.35939416782779804, -0.5648005936517013],
+    [-0.811253470914096, -0.34489532376394383, -0.4721387736413907],
+    [-0.2199307791404586, -0.6583691780275012, -0.7198475378926175],
+    [0.21392348345014006, -0.14781718295506904, -0.9656017935214212],
+    [-0.1092625278784851, 0.4811951572873198, -0.8697775121287252],
+])
 
 
 def _pos_angle(a):
@@ -191,7 +203,6 @@ def _pos_angle(a):
 
 def _geo_to_hex2d(lat: np.ndarray, lon: np.ndarray, res: int):
     """(lat, lon) radians -> (face, x, y) on that face's res grid."""
-    _init_faces()
     xyz = np.stack([np.cos(lat) * np.cos(lon),
                     np.cos(lat) * np.sin(lon),
                     np.sin(lat)], axis=1)
@@ -288,7 +299,6 @@ def _ijk_to_hex2d(ijk) -> Tuple[np.ndarray, np.ndarray]:
 def _hex2d_to_geo(x: float, y: float, face: int, res: int,
                   substrate: bool) -> Tuple[float, float]:
     """(x, y) on a face grid -> (lat, lon) radians."""
-    _init_faces()
     r = math.hypot(x, y)
     if r < _EPSILON:
         return T.FACE_CENTER_GEO[face]
@@ -425,7 +435,6 @@ def face_neighbors():
     faces' grids agree exactly on the edge, giving three correspondences
     that pin the affine (rotate60^r + translate) map.
     """
-    _init_faces()
     out = {}
     # solved on the res-2 Class II grid (maxDim 14, unitScale 7): three
     # on-edge lattice points (exact in both faces) pin (g, r·t) up to a

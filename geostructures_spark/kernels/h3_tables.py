@@ -6,11 +6,16 @@ aperture-7 hex lattice per face, and (c) a canonical numbering of the 122
 resolution-0 cells. This module provides those tables for the from-scratch
 H3 kernel (h3_core.py):
 
-- ``FACE_CENTER_GEO`` / ``FACE_AXES_AZ`` — the 20 face centers and i-axis
-  azimuths. The published values are reproduced from the publicly documented
-  algorithm and **snapped to an exact regular icosahedron** (a Kabsch fit of
-  a perfect icosahedron to the quoted centers), eliminating transcription
-  noise; residuals are asserted tiny at import.
+- ``FACE_CENTER_GEO`` / ``FACE_AXES_AZ`` / ``FACE_VERTEX_GEO`` — the 20
+  face centers, i-axis azimuths and per-face vertices. The published values
+  are reproduced from the publicly documented algorithm and **snapped to an
+  exact regular icosahedron** (``_build_exact_geometry``: a Kabsch fit of a
+  perfect icosahedron to the quoted centers), eliminating transcription
+  noise. The snap ran once and its output is kept here as literals: its
+  last bits follow the BLAS kernel the CPU selects, and the H3 oracle SQL
+  embeds these doubles, so deriving them at import would make the oracle
+  text differ between hosts. tests/test_pinned_constants.py re-runs the
+  snap (with its residual asserts) and checks the literals against it.
 - ``BASE_CELL_DATA`` — the canonical numbering: home (face, i, j, k) of each
   res-0 cell, pentagon flag, and the cw-offset faces of each pentagon.
 - ``face_ijk_base_cells()`` — derived geometrically: for every face and
@@ -40,7 +45,9 @@ __all__ = [
 
 M_SQRT7 = math.sqrt(7.0)
 RES0_U_GNOMONIC = 0.38196601125010500003  # tan of the res-0 unit distance
-M_AP7_ROT_RADS = math.asin(math.sqrt(3.0 / 28.0))  # ~19.1 deg, aperture-7 rotation
+# aperture-7 rotation, asin(sqrt(3/28)) ~ 19.1 deg; the H3 C library's
+# published constant (constants.h), not a libm call
+M_AP7_ROT_RADS = 0.333473172251832115336090755351601070065900389
 
 NUM_BASE_CELLS = 122
 
@@ -281,4 +288,100 @@ def _build_exact_geometry():
     return centers_geo, axes, vert_geo
 
 
-FACE_CENTER_GEO, FACE_AXES_AZ, FACE_VERTEX_GEO = _build_exact_geometry()
+# --- the snapped tables -----------------------------------------------------
+# _build_exact_geometry()'s output, written with repr(). The vertex order
+# within a face is the one the derivation happened to produce.
+
+FACE_CENTER_GEO = [
+    (0.8035826497189889, 1.2483974196173997),
+    (1.3077478834556406, 2.536945009877921),
+    (1.0547512535239518, -1.3475173589003855),
+    (0.6001915955381845, -0.45060390946974843),
+    (0.4917154281987712, 0.4019882029113128),
+    (0.1727453274156186, 1.6781468852804395),
+    (0.6059293215713533, 2.9539233298124175),
+    (0.4273705183289808, -1.888876200336278),
+    (-0.0790661185492146, -0.7334295133808615),
+    (-0.2309616444553861, 0.5064955873323556),
+    (0.0790661185492146, 2.4081631402089316),
+    (0.2309616444553861, -2.635097066257438),
+    (-0.1727453274156186, -1.4634457683093538),
+    (-0.6059293215713533, -0.18766932377737577),
+    (-0.4273705183289808, 1.2527164532535153),
+    (-0.6001915955381845, 2.6909887441200446),
+    (-0.4917154281987712, -2.7396044506784802),
+    (-0.8035826497189889, -1.8931952339723936),
+    (-1.3077478834556406, -0.6046476437118723),
+    (-1.0547512535239518, 1.7940752946894079),
+]
+FACE_AXES_AZ = [
+    5.619958268523936, 5.76033908171418, 0.7802136543934359,
+    0.4304693639800018, 6.13026912333511, 2.69287770653064,
+    2.9829630034772427, 3.5329120027901437, 3.4943050042595702,
+    3.0032141694995373, 5.930472956509809, 0.13837848409025594,
+    0.44871494705915355, 0.1586296501125502, 5.891865957979236,
+    2.7111232896097914, 3.294508837434269, 3.8048196922454434,
+    3.6644388790551994, 2.3613789991963574,
+]
+FACE_VERTEX_GEO = [
+    [(0.6824237381227757, 2.1345376823062954),
+     (1.1292280282732132, 0.18389136451249852),
+     (0.18234057161445041, 1.0150434523068808)],
+    [(0.6824237381227757, 2.1345376823062954),
+     (1.1292280282732132, 0.18389136451249852),
+     (0.874465831655217, -2.50417205655199)],
+    [(1.1292280282732132, 0.18389136451249852),
+     (0.874465831655217, -2.50417205655199),
+     (0.41395588772480907, -1.1716801296176957)],
+    [(1.1292280282732132, 0.18389136451249852),
+     (0.41395588772480907, -1.1716801296176957),
+     (0.04015796854812396, -0.09154933123092046)],
+    [(1.1292280282732132, 0.18389136451249852),
+     (0.18234057161445041, 1.0150434523068808),
+     (0.04015796854812396, -0.09154933123092046)],
+    [(0.6824237381227757, 2.1345376823062954),
+     (-0.41395588772480907, 1.9699125239720974),
+     (0.18234057161445041, 1.0150434523068808)],
+    [(0.6824237381227757, 2.1345376823062954),
+     (-0.04015796854812396, 3.050043322358873),
+     (0.874465831655217, -2.50417205655199)],
+    [(-0.18234057161445041, -2.1265492012829124),
+     (0.874465831655217, -2.50417205655199),
+     (0.41395588772480907, -1.1716801296176957)],
+    [(-0.6824237381227757, -1.0070549712834977),
+     (0.41395588772480907, -1.1716801296176957),
+     (0.04015796854812396, -0.09154933123092046)],
+    [(-0.874465831655217, 0.6374205970378034),
+     (0.18234057161445041, 1.0150434523068808),
+     (0.04015796854812396, -0.09154933123092046)],
+    [(0.6824237381227757, 2.1345376823062954),
+     (-0.41395588772480907, 1.9699125239720974),
+     (-0.04015796854812396, 3.050043322358873)],
+    [(-0.04015796854812396, 3.050043322358873),
+     (-0.18234057161445041, -2.1265492012829124),
+     (0.874465831655217, -2.50417205655199)],
+    [(-0.18234057161445041, -2.1265492012829124),
+     (-0.6824237381227757, -1.0070549712834977),
+     (0.41395588772480907, -1.1716801296176957)],
+    [(-0.874465831655217, 0.6374205970378034),
+     (-0.6824237381227757, -1.0070549712834977),
+     (0.04015796854812396, -0.09154933123092046)],
+    [(-0.41395588772480907, 1.9699125239720974),
+     (-0.874465831655217, 0.6374205970378034),
+     (0.18234057161445041, 1.0150434523068808)],
+    [(-0.41395588772480907, 1.9699125239720974),
+     (-0.04015796854812396, 3.050043322358873),
+     (-1.1292280282732132, -2.9577012890772947)],
+    [(-0.04015796854812396, 3.050043322358873),
+     (-0.18234057161445041, -2.1265492012829124),
+     (-1.1292280282732132, -2.9577012890772947)],
+    [(-0.18234057161445041, -2.1265492012829124),
+     (-1.1292280282732132, -2.9577012890772947),
+     (-0.6824237381227757, -1.0070549712834977)],
+    [(-0.874465831655217, 0.6374205970378034),
+     (-1.1292280282732132, -2.9577012890772947),
+     (-0.6824237381227757, -1.0070549712834977)],
+    [(-0.41395588772480907, 1.9699125239720974),
+     (-0.874465831655217, 0.6374205970378034),
+     (-1.1292280282732132, -2.9577012890772947)],
+]

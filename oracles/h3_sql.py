@@ -45,7 +45,6 @@ def _r(x) -> str:
 
 def _faces_values() -> str:
     from geostructures_spark.kernels import h3_core as H
-    H._init_faces()
     rows = []
     for f in range(20):
         x, y, z = H._FACE_XYZ[f]

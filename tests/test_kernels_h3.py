@@ -147,7 +147,6 @@ def test_class_iii_icosa_edge_distortion_vertices():
     import numpy as np
     from geostructures_spark.kernels import h3_core as H
 
-    H._init_faces()
     fc = np.array(H._FACE_XYZ)
 
     def xyz(plat, plon):
@@ -200,7 +199,6 @@ def test_pentagon_boundary_class_ii_and_iii():
     import numpy as np
     from geostructures_spark.kernels import h3_core as H
 
-    H._init_faces()
     fc = np.array(H._FACE_XYZ)
 
     def xyz(plat, plon):
