@@ -2016,7 +2016,7 @@ def _q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy('score'))
 
 
-_QUALITY_DUCK = """
+_QUALITY_DUCK = r"""
   WITH toks AS (
     SELECT doc_id, text, string_split_regex(trim(text), ' +') AS w,
            length(text) AS n_chars FROM documents),

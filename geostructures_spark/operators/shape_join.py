@@ -5,10 +5,11 @@ The distributed form of the reference's collection filters
 filter_contains :147-159, intersects :433-458 in collections.py), on the
 spatial join's JVM window cover (operators/spatial_join.py):
 
-  level      = the coarsest _lvl either side's window uses (one
-               _catalog_size agg over both, which also sizes the budget)
-  covers     = _window_cover(_with_window(side), floor=level)
-  candidates = covers_a ⋈ covers_b ON cell  (packed BIGINT; distinct ids)
+  levels     = the _lvl both sides' windows use (one _catalog_size agg
+               over both, which also sizes the budget)
+  covers     = _window_cover(_with_window(side)), each shape at its _lvl
+  candidates = covers_a ⋈ covers_b ON cell at greatest(a_lvl, b_lvl)
+               (_cover_pairs; packed BIGINT; distinct ids)
   sides      = (id, dt_start, dt_end, JSON spec) per shape, joined onto
                the candidates by id (broadcast within the spatial join's
                budget, shuffled beyond it)
@@ -17,9 +18,10 @@ spatial join's JVM window cover (operators/spatial_join.py):
                each kernel built once per Arrow batch from its spec
 
 A window holds every cell with a point of its shape, so two shapes sharing
-a point share a cell at one common level: the cell join is a superset
-filter, and the refine makes it exact. Shape geometries never reach the
-driver: they ride the id joins as JSON specs.
+a point share its cell's ancestor at the coarser of their levels, which
+the finer side keys too: the cell join is a superset filter, and the
+refine makes it exact. Shape geometries never reach the driver: they ride
+the id joins as JSON specs.
 """
 
 from __future__ import annotations
@@ -39,6 +41,21 @@ from geostructures_spark.operators import spatial_join as spj
 from geostructures_spark.operators.tiling import shape_row_to_kernel
 
 __all__ = ['shape_join']
+
+
+def _cover_pairs(win_a: DataFrame, win_b: DataFrame, levels, length: int) -> DataFrame:
+    """Distinct (a_id, b_id) pairs of windowed catalogs (_with_window) whose
+    covers share a cell. Each cell keys at every catalog level at or above
+    its own (_level_keys_sql); a pair keeps only the level where one side's
+    key is its own cell's, greatest(a_lvl, b_lvl)."""
+    def keyed(windowed: DataFrame, s: str) -> DataFrame:
+        cover = spj._window_cover(windowed, length, carry=('_i', '_j', '_lvl'))
+        return cover.selectExpr(
+            f'shape_id AS {s}_id', f'cell AS {s}_own',
+            f"{spj._level_keys_sql('_i', '_j', '_lvl', levels, length)} AS cell")
+    return (keyed(win_a, 'a').join(keyed(win_b, 'b'), 'cell')
+            .filter('a_own = cell OR b_own = cell')
+            .select('a_id', 'b_id').distinct())
 
 
 def shape_join(shapes_a: DataFrame, shapes_b: DataFrame,
@@ -63,20 +80,12 @@ def shape_join(shapes_a: DataFrame, shapes_b: DataFrame,
     n, verts, _, levels = spj._catalog_size(win_a, win_b)
     hint = F.broadcast if (n <= spj._BROADCAST_MAX_SHAPES and
                            verts <= spj._BROADCAST_MAX_RING_VERTS) else (lambda df: df)
-    floor = max(levels, default=0)
-
-    def side(shapes: DataFrame, windowed: DataFrame, s: str):
-        covers = spj._window_cover(windowed, length, floor)
-        rel = shapes.select(F.col('shape_id').alias(f'{s}_id'),
-                            F.col('dt_start').alias(f'{s}_start'),
-                            F.col('dt_end').alias(f'{s}_end'),
-                            spj._shape_spec_col(shapes).alias(f'_spec_{s}'))
-        return covers.withColumnRenamed('shape_id', f'{s}_id'), hint(rel)
-
-    cov_a, rel_a = side(shapes_a, win_a, 'a')
-    cov_b, rel_b = side(shapes_b, win_b, 'b')
-    cand = (cov_a.join(cov_b, 'cell').select('a_id', 'b_id').distinct()
-            .join(rel_a, 'a_id').join(rel_b, 'b_id'))
+    cand = _cover_pairs(win_a, win_b, levels, length)
+    for shapes, s in ((shapes_a, 'a'), (shapes_b, 'b')):
+        cand = cand.join(hint(shapes.select(
+            F.col('shape_id').alias(f'{s}_id'), F.col('dt_start').alias(f'{s}_start'),
+            F.col('dt_end').alias(f'{s}_end'),
+            spj._shape_spec_col(shapes).alias(f'_spec_{s}'))), f'{s}_id')
 
     if time_gated:
         untimed = (F.col('a_start').isNull() | F.col('a_end').isNull() |

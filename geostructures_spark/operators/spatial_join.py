@@ -49,7 +49,7 @@ from geostructures_spark.functions.geo import (
     haversine_sql, interval_contains_instant_expr, niemeyer_quantize_sql)
 from geostructures_spark.operators.tiling import shape_row_to_kernel
 
-__all__ = ['spatial_join_points', 'filter_points_by_shape']
+__all__ = ['spatial_join_points']
 
 
 _BROADCAST_MAX_SHAPES = 200_000
@@ -143,6 +143,20 @@ def _key_sql(i: str, j: str, lvl, length: int) -> str:
     ``2 * (length - lvl)``, one above ``j``'s top bit at that level, so keys
     of different levels never collide (needs length <= 15)."""
     return f'shiftleft({i}, 32) | shiftleft(1L, 2 * ({length} - {lvl})) | {j}'
+
+
+def _level_keys_sql(i: str, j: str, lvl, levels, length: int) -> str:
+    """SQL of the join keys of the cell ``(i, j)`` at level ``lvl`` (0 for
+    points, the ``_lvl`` column for cover cells): its ancestor's key
+    (_key_sql; indexes shift right 2 bits a level) at each catalog level at
+    or above ``lvl``. A plain key for one level, else an explode; a cover
+    cell keys itself at lower levels, and array_distinct drops the repeats."""
+    keys = [_key_sql(f'shiftright({i}, 2 * ({d} - {lvl}))', f'shiftright({j}, 2 * ({d} - {lvl}))',
+                     d, length)
+            for d in (levels if lvl == 0 else [f'greatest({d}, {lvl})' for d in levels])]
+    arr = f"array({', '.join(keys)})"
+    return keys[0] if len(keys) == 1 else (
+        f'explode({arr if lvl == 0 else f"array_distinct({arr})"})')
 
 
 def _window_cols(p, length: int) -> List[Tuple[str, str]]:
@@ -262,11 +276,13 @@ def _window_cover(windowed: DataFrame, length: int, floor: int = 0,
     ``floor`` > 0 covers every shape at parent-cell granularity or coarser:
     ~16x fewer cover rows per dropped char for the same candidate-superset
     guarantee — the knob that keeps the broadcast relation small when
-    candidates are cheap to reject (all-circle JVM predicate)."""
+    candidates are cheap to reject (all-circle JVM predicate). ``carry``
+    may name the cell's ``_i``, ``_j`` and ``_lvl`` (for _level_keys_sql).
+    The cover runs in the partitions the shapes arrive in: no shuffle."""
     from geostructures_spark.kernels.geodesy import EARTH_RADIUS_METERS
     lvl = f'greatest(_lvl, {floor})'
     base = windowed.selectExpr(
-        'shape_id', *(c for c in carry if c not in ('_clon', '_clat', '_r')),
+        'shape_id', *(c for c in carry if c not in ('_clon', '_clat', '_r', '_lvl', '_i', '_j')),
         '_r', '_clon', '_clat', '_full', f'{lvl} AS _lvl',
         *(f'shiftright(_{k}, 2 * {lvl}) AS _{k}' for k in ('i0', 'i1', 'j0', 'j1')),
         # the (parent-)cell geometry at the shape's level; a product of
@@ -274,14 +290,6 @@ def _window_cover(windowed: DataFrame, length: int, floor: int = 0,
         # the per-cell trim below stays small enough for the JIT
         *(f'{_double(span / (1 << 2 * length))} * shiftleft(1L, 2 * {lvl}) AS _{name}'
           for name, span in (('w', 360), ('h', 180))))
-    if floor == 0:
-        # parallelize big fine-grained explodes: the shapes side typically
-        # scans from a small file (1-2 input partitions) — a tiny keyed
-        # repartition spreads the window enumeration over the cluster.
-        # Floored covers (~16x fewer rows per dropped char) skip the extra
-        # shuffle stage.
-        n_parts = max(8, windowed.sparkSession.sparkContext.defaultParallelism)
-        base = base.repartition(n_parts, 'shape_id')
     lon_lo, lat_lo = '(-180D + _i * _w)', '(-90D + _j * _h)'
     lon_cl = f'least(greatest(_clon, {lon_lo}), {lon_lo} + _w)'
     lat_cl = f'least(greatest(_clat, {lat_lo}), {lat_lo} + _h)'
@@ -309,7 +317,6 @@ def spatial_join_points(
     time_gated: bool = True,
     salt_shards: int = 0,
     max_broadcast_shapes: int = _BROADCAST_MAX_SHAPES,
-    max_broadcast_ring_verts: int = _BROADCAST_MAX_RING_VERTS,
 ) -> DataFrame:
     """points ⨝ shapes with exact containment (point-probe semantics of
     contains/intersects, which coincide for points — structures.py:156-157).
@@ -325,8 +332,8 @@ def spatial_join_points(
     the catalog uses (one eager agg, _catalog_size, finds them). Base 16
     only, ``length`` 1..15. Physical strategy is size-guarded: catalogs
     within the broadcast budget broadcast their covers and specs; larger
-    ones join both as shuffle joins (set the thresholds to 0 to force
-    that path). The geometry is never collected."""
+    ones join both as shuffle joins (set ``max_broadcast_shapes`` to 0
+    to force that path). The geometry is never collected."""
     if base != 16:
         raise ValueError('spatial_join_points supports base 16 only')
     if not 1 <= length <= 15:
@@ -335,7 +342,7 @@ def spatial_join_points(
     windowed = _with_window(shapes, length)
     n_shapes, n_verts, n_plain, levels = _catalog_size(windowed)
     use_broadcast = (n_shapes <= max_broadcast_shapes and
-                     n_verts <= max_broadcast_ring_verts)
+                     n_verts <= _BROADCAST_MAX_RING_VERTS)
     all_plain_circles = n_shapes > 0 and n_plain == n_shapes
     gated = time_gated and 'warc_ts' in points.columns
     dt_cols = ['dt_start', 'dt_end'] if gated else []
@@ -351,13 +358,10 @@ def spatial_join_points(
     param_cols = ['_clon', '_clat', '_r'] if all_plain_circles else []
     covers = _window_cover(windowed, length, floor, carry=dt_cols + param_cols)
 
-    # one key per cover level, from the same quantization as the windows:
-    # a plain column for one level, an explode (one row per level) else
+    # a point is a level-0 cell: one key per cover level, from the same
+    # quantization as the windows
     qlon, qlat = niemeyer_quantize_sql('lon', 'lat', length)
-    keys = [_key_sql(f'shiftright({qlon}, {2 * d})', f'shiftright({qlat}, {2 * d})',
-                     d, length) for d in levels]
-    points = points.withColumn('_ck', F.expr(
-        keys[0] if len(keys) == 1 else f"explode(array({', '.join(keys)}))"))
+    points = points.withColumn('_ck', F.expr(_level_keys_sql(qlon, qlat, 0, levels, length)))
 
     if salt_shards > 0:
         # replicate the broadcast side per shard; salt the big side
@@ -401,11 +405,3 @@ def spatial_join_points(
     drop = ['_ck', '_spec', 'join_key', '_shard', *dt_cols, *param_cols]
     return out.drop(*[c for c in drop if c in out.columns])
 
-
-def filter_points_by_shape(points: DataFrame, shapes: DataFrame,
-                           **kwargs) -> DataFrame:
-    """filter_by_intersection with a point-set left side
-    (collections.py:119-131): semi-join — points that fall in ANY shape."""
-    joined = spatial_join_points(points, shapes, **kwargs)
-    key_cols = [c for c in ('url', 'warc_ts', 'point_idx') if c in points.columns]
-    return points.join(joined.select(*key_cols).distinct(), key_cols, 'left_semi')

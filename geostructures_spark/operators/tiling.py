@@ -13,8 +13,8 @@ The Spark-side of the reference's hashers (geohash.py:328-764):
   seconds, utils/agg_functions.py:9-24), unique_entities (countDistinct of
   the 'entity' property, :26-40).
 
-Skew note: cell keys are Zipf-hot for web data (cities). ``with_cell`` can
-emit a ``salted_cell`` (cell#shard) for the heavy side of a join; AQE skew
+Skew note: cell keys are Zipf-hot for web data (cities). The spatial join
+salts its points side (``spatial_join_points(salt_shards=...)``); AQE skew
 splitting is on as backstop (plans/session.py).
 """
 
@@ -33,7 +33,7 @@ from geostructures_spark.functions.geo import niemeyer_encode_udf
 DEFAULT_COVER_PARTITIONS = 64
 
 __all__ = [
-    'with_cell', 'with_salted_cell', 'cover_shapes', 'hash_coordinates_agg',
+    'with_cell', 'cover_shapes', 'hash_coordinates_agg',
     'hash_collection_agg', 'shape_row_to_kernel', 'SHAPES_SCHEMA_DDL',
     'compact_cover', 'uncompact_cover',
 ]
@@ -115,18 +115,6 @@ def with_cell(df: DataFrame, length: int = 8, base: int = 16,
     else:
         enc = niemeyer_encode_udf(length, base)
     return df.withColumn(cell_col, enc(F.col(lon), F.col(lat)))
-
-
-def with_salted_cell(df: DataFrame, shards: int = 8,
-                     cell_col: str = 'cell',
-                     salt_col: str = 'salted_cell') -> DataFrame:
-    """cell#shard salting for hot cells: spreads a hot key over ``shards``
-    shuffle partitions. The small (broadcast) side replicates each cover
-    cell ``shards`` times instead (see spatial_join.salted variants)."""
-    return df.withColumn(
-        salt_col,
-        F.concat_ws('#', F.col(cell_col),
-                    (F.pmod(F.xxhash64('url'), F.lit(shards))).cast('string')))
 
 
 def cover_shapes(shapes: DataFrame, length: int = 8, base: int = 16,

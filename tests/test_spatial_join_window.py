@@ -240,3 +240,50 @@ def test_trim_keeps_cell_nearer_than_its_clamped_corner(spark):
                   joined.select('shape_id', 'url', 'point_idx').collect())
     assert _brute_force(points, shapes, time_gated=False) == Counter({(1, 'u0', 0): 1})
     assert got == Counter({(1, 'u0', 0): 1})
+
+
+def test_shape_join_keys_each_cover_at_its_own_level(spark):
+    """A 120 x 90 degree polygon covers two levels up at length 6. Keyed at
+    one common level, its cover coarsened every cover of the join (the 750
+    candidate pairs of the other shapes became 1,130); keyed at its own
+    level, with the finer side reaching it through ancestor keys, the other
+    shapes keep their pairs. Both predicates match brute force, and the
+    cover runs without a shuffle."""
+    from geostructures_spark.kernels import shapes as shp
+    from geostructures_spark.operators.shape_join import _cover_pairs, shape_join
+    from geostructures_spark.operators.spatial_join import (
+        _catalog_size, _window_cover, _with_window)
+    from geostructures_spark.operators.tiling import shape_row_to_kernel
+    from geostructures_spark.sources.shapes import shapes_df
+    a = shapes_df(spark, 60, seed=42)
+    ring = [{'lon': float(x), 'lat': float(y)}
+            for x, y in ((-60, -45), (60, -45), (60, 45), (-60, 45), (-60, -45))]
+    big = a.unionByName(spark.createDataFrame(
+        [(1000, 'polygon', None, [ring], None, None, None)], a.schema)).cache()
+    b = shapes_df(spark, 200, seed=9).cache()
+
+    def pairs(shapes):
+        win, win_b = _with_window(shapes, 6), _with_window(b, 6)
+        levels = _catalog_size(win, win_b)[3]
+        return levels, {tuple(r) for r in _cover_pairs(win, win_b, levels, 6).collect()}
+
+    levels, before = pairs(a)
+    levels_big, after = pairs(big)
+    assert levels == [0] and levels_big == [0, 2]
+    assert len(before) == 750
+    assert {p for p in after if p[0] != 1000} == before
+
+    ka = {r.shape_id: shape_row_to_kernel(r.asDict(recursive=True)) for r in big.collect()}
+    kb = {r.shape_id: shape_row_to_kernel(r.asDict(recursive=True)) for r in b.collect()}
+    for predicate, kernel in (('intersects', shp.shapes_intersect),
+                              ('contains', shp.shape_contains_shape)):
+        got = {(r.a_id, r.b_id) for r in
+               shape_join(big, b, predicate=predicate, time_gated=False).collect()}
+        brute = {(x, y) for x in ka for y in kb if kernel(ka[x], kb[y])}
+        assert got == brute, predicate
+        assert {y for x, y in brute if x == 1000}, predicate
+
+    cover = _window_cover(_with_window(big, 6), 6)
+    assert 'Exchange' not in cover._jdf.queryExecution().executedPlan().toString()
+    big.unpersist()
+    b.unpersist()

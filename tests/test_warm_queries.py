@@ -37,7 +37,7 @@ BUILD_JOB_BUDGET = {
     'cosine_topk': 1,
     'events_windowed_agg': 0,
     # not a headline query: shape_join's one `_catalog_size` agg over both
-    # sides (broadcast budget and common cover level), two jobs under AQE
+    # sides (broadcast budget and cover levels), two jobs under AQE
     'shape_join_intersects': 2,
 }
 
