@@ -447,7 +447,11 @@ def haversine_expr(lon1: Column, lat1: Column, lon2: Column, lat2: Column) -> Co
 
 def haversine_sql(lon1: str, lat1: str, lon2: str, lat2: str) -> str:
     """``haversine_expr`` as SQL text over SQL expressions: the same
-    operations in the same order, so the values are identical."""
+    operations in the same order as the NumPy kernel's haversine. The JVM's
+    and NumPy's sin/cos/atan2 may round differently, so a value can differ
+    from the kernel's in the last bits (about 4 % of random pairs, by at
+    most ~2e-10 m); the spatial join refines every plain circle with this
+    expression, so a circle's verdict never depends on its catalog."""
     a = (f'pow(sin((radians({lat2}) - radians({lat1})) / 2), 2) + '
          f'cos(radians({lat1})) * cos(radians({lat2})) * '
          f'pow(sin((radians({lon2}) - radians({lon1})) / 2), 2)')

@@ -77,7 +77,7 @@ def shape_join(shapes_a: DataFrame, shapes_b: DataFrame,
 
     win_a, win_b = spj._with_window(shapes_a, length), spj._with_window(shapes_b, length)
     # the budget is read here, at call time, so callers can lower it
-    n, verts, _, levels = spj._catalog_size(win_a, win_b)
+    n, verts, levels = spj._catalog_size(win_a, win_b)
     hint = F.broadcast if (n <= spj._BROADCAST_MAX_SHAPES and
                            verts <= spj._BROADCAST_MAX_RING_VERTS) else (lambda df: df)
     cand = _cover_pairs(win_a, win_b, levels, length)

@@ -2,14 +2,14 @@
 
 Architecture (SURVEY.md §3.2):
 
-  points --packed (i, j) cell key per cover level (JVM quantize)--> keyed
+  points --packed (i, j) cell key at every level (JVM quantize)--> keyed
   shapes --JVM window cover at the shape's level (SQL text)--> (shape_id,
-           key), broadcast
+           key, center, radius), broadcast by Spark's size estimate
   candidates = points ⋈ broadcast(covers) ON key         (equi-join)
   time gate  = right-open interval Column predicate      (JVM, pre-UDF)
-  exact      = JVM haversine for all-circle catalogs, else an
+  exact      = per row: JVM haversine for a plain circle, else an
                Arrow-batched kernel predicate per shape over its JSON
-               spec, joined by shape_id                  (pandas UDF)
+               spec, LEFT-joined by shape_id             (pandas UDF)
 
 The cover is one closed-form window per shape (_window_cols): the
 spherical-cap box of a circle, ellipse or ring, trimmed by distance, and
@@ -17,7 +17,8 @@ the min/max box of every other kind, enumerated as cell-index ranges in
 the JVM. Each shape covers at its own level (dropped Niemeyer chars): the
 fewest at which its window fits _SQL_COVER_MAX_BOXES cells, so a big shape
 gets a coarser cover instead of a Python one. The points side derives one
-key per level present in the catalog; a tag bit keeps levels apart.
+key per level the cover can use; a tag bit keeps levels apart. Building the
+join runs no Spark job.
 
 The cell equi-join replaces the reference's per-pair sweep-line pruning
 (_geometry.py:223-316) as the candidate structure; the exact predicate
@@ -25,13 +26,15 @@ replays contains_coordinate/intersects semantics (structures.py:440-458 etc.)
 bit-for-bit via kernels.shapes.
 
 Scale notes:
-- the shapes side is broadcast (shape catalogs are ~10^4-10^6 rows; the
+- the shapes side is broadcast when Spark's static size estimate of the
+  catalog is within budget (shape catalogs are ~10^4-10^6 rows; the
   pages/points side is the 10^12-row one);
 - shape geometries are never collected: they reach their
   candidate rows as JSON specs through a shape_id equi-join;
 - hot cells (cities) can be salted: ``salt_shards > 0`` replicates cover
-  rows per shard and salts the points side, splitting a hot cell across
-  ``shards`` tasks; AQE skew-join is the backstop.
+  rows per shard and salts the points side, and the join keys on the
+  numeric pair (cell key, shard), splitting a hot cell across ``shards``
+  tasks; AQE skew-join is the backstop.
 """
 
 from __future__ import annotations
@@ -54,6 +57,9 @@ __all__ = ['spatial_join_points']
 
 _BROADCAST_MAX_SHAPES = 200_000
 _BROADCAST_MAX_RING_VERTS = 20_000_000   # ~640 MB of packed ring floats
+# the point join reads its shape budget as bytes of Spark's static size
+# estimate of the catalog: a Parquet shapes_df(200_000) estimates 12.4 MB
+_BROADCAST_BYTES_PER_SHAPE = 80
 
 
 def _params_sql(shapes: DataFrame):
@@ -71,21 +77,17 @@ def _plain_circle_sql(p) -> str:
 
 
 def _catalog_size(*windowed: DataFrame):
-    """(n_shapes, total ring vertices, n_plain_circles, levels) of catalogs
-    that carry their window columns (_with_window) — ONE cheap agg over the
-    union of their narrow projections deciding broadcast vs shuffle
-    execution, the all-circle JVM exact predicate (plain circle = no holes,
-    radius set) and the sorted distinct cover levels (``_lvl``)."""
-    row = reduce(DataFrame.union, (
-        w.selectExpr('kind', f"{_params_sql(w)('radius')} AS radius", 'rings', '_lvl')
-        for w in windowed)).selectExpr(
+    """(n_shapes, total ring vertices, levels) of catalogs that carry their
+    window columns (_with_window): ONE agg (a Spark job) over the union of
+    their narrow projections, deciding broadcast vs shuffle execution and
+    the sorted distinct cover levels (``_lvl``). shape_join's probe; the
+    point join needs none (spatial_join_points)."""
+    row = reduce(DataFrame.union, (w.select('rings', '_lvl') for w in windowed)).selectExpr(
         'count(*) AS n',
         'coalesce(sum(aggregate(rings, 0, (acc, ring) -> acc + size(ring))), 0) AS verts',
-        f'coalesce(sum(CAST({_plain_circle_sql(lambda f: f)} AS INT)), 0) AS plain',
         'collect_set(_lvl) AS levels',
     ).collect()[0]
-    return (int(row['n']), int(row['verts']), int(row['plain']),
-            sorted(int(d) for d in row['levels']))
+    return int(row['n']), int(row['verts']), sorted(int(d) for d in row['levels'])
 
 
 def _shape_spec_col(shapes: DataFrame):
@@ -101,8 +103,8 @@ def _shape_spec_col(shapes: DataFrame):
 def _exact_predicate_spec_udf():
     """Exact containment over shipped shape specs: per Arrow batch, group
     candidate rows by shape_id (argsort), build each kernel dict once from
-    its JSON spec, evaluate vectorized. No collect, no broadcast
-    variable."""
+    its JSON spec, evaluate vectorized. A NULL spec (a plain circle, which
+    the JVM refines) is skipped. No collect, no broadcast variable."""
     import json
 
     from geostructures_spark.kernels import shapes as shp
@@ -122,6 +124,8 @@ def _exact_predicate_spec_udf():
         bounds = np.flatnonzero(np.r_[True, sorted_sid[1:] != sorted_sid[:-1], True])
         for i in range(len(bounds) - 1):
             sel = order[bounds[i]:bounds[i + 1]]
+            if specs[sel[0]] is None:
+                continue
             shape = shape_row_to_kernel(json.loads(specs[sel[0]]))
             out[sel] = shp.shape_contains_points(shape, lons[sel], lats[sel])
         return pd.Series(out, index=shape_id.index)
@@ -253,12 +257,11 @@ def _sql_cover_ok_expr(length: int):
     return F.expr(text)
 
 
-def _window_cover(windowed: DataFrame, length: int, floor: int = 0,
-                  carry=()) -> DataFrame:
+def _window_cover(windowed: DataFrame, length: int, carry=()) -> DataFrame:
     """(shape_id, cell, *carry) cover rows of shapes that carry their
     window columns (_with_window): each shape's window is shifted to its
-    level ``greatest(_lvl, floor)``, enumerated, and circle, ellipse and
-    ring cells are trimmed by a triangle-inequality distance test. ``cell``
+    level ``_lvl``, enumerated, and circle, ellipse and ring cells are
+    trimmed by a triangle-inequality distance test. ``cell``
     is the level-tagged packed key (_key_sql) the points side derives from
     the same quantization. The cover is a SUPERSET of the cells holding a
     matching point, so the exact containment predicate downstream returns
@@ -273,22 +276,18 @@ def _window_cover(windowed: DataFrame, length: int, floor: int = 0,
     which over-estimates distance only when the window wraps — those
     shapes take the full-longitude branch, where the trim is skipped.
 
-    ``floor`` > 0 covers every shape at parent-cell granularity or coarser:
-    ~16x fewer cover rows per dropped char for the same candidate-superset
-    guarantee — the knob that keeps the broadcast relation small when
-    candidates are cheap to reject (all-circle JVM predicate). ``carry``
-    may name the cell's ``_i``, ``_j`` and ``_lvl`` (for _level_keys_sql).
-    The cover runs in the partitions the shapes arrive in: no shuffle."""
+    ``carry`` may name the cell's ``_i``, ``_j`` and ``_lvl`` (for
+    _level_keys_sql). The cover runs in the partitions the shapes arrive
+    in: no shuffle."""
     from geostructures_spark.kernels.geodesy import EARTH_RADIUS_METERS
-    lvl = f'greatest(_lvl, {floor})'
     base = windowed.selectExpr(
         'shape_id', *(c for c in carry if c not in ('_clon', '_clat', '_r', '_lvl', '_i', '_j')),
-        '_r', '_clon', '_clat', '_full', f'{lvl} AS _lvl',
-        *(f'shiftright(_{k}, 2 * {lvl}) AS _{k}' for k in ('i0', 'i1', 'j0', 'j1')),
+        '_r', '_clon', '_clat', '_full', '_lvl',
+        *(f'shiftright(_{k}, 2 * _lvl) AS _{k}' for k in ('i0', 'i1', 'j0', 'j1')),
         # the (parent-)cell geometry at the shape's level; a product of
         # non-NULL terms keeps the columns non-nullable, so the codegen of
         # the per-cell trim below stays small enough for the JIT
-        *(f'{_double(span / (1 << 2 * length))} * shiftleft(1L, 2 * {lvl}) AS _{name}'
+        *(f'{_double(span / (1 << 2 * length))} * shiftleft(1L, 2 * _lvl) AS _{name}'
           for name, span in (('w', 360), ('h', 180))))
     lon_lo, lat_lo = '(-180D + _i * _w)', '(-90D + _j * _h)'
     lon_cl = f'least(greatest(_clon, {lon_lo}), {lon_lo} + _w)'
@@ -327,61 +326,59 @@ def spatial_join_points(
     using points.warc_ts vs shapes dt_start/dt_end; shapes with NULL dt
     match all times (untimed shapes tested spatially, collections.py:447-452).
 
-    Every shape covers with its JVM window at its own level (_window_cols);
-    the points' packed (i, j) keys come from ``lon``/``lat`` at every level
-    the catalog uses (one eager agg, _catalog_size, finds them). Base 16
-    only, ``length`` 1..15. Physical strategy is size-guarded: catalogs
-    within the broadcast budget broadcast their covers and specs; larger
-    ones join both as shuffle joins (set ``max_broadcast_shapes`` to 0
-    to force that path). The geometry is never collected."""
+    Every shape covers with its JVM window at its own level (_window_cols),
+    and the points key at every level ``0..length-1`` (a shape's cover holds
+    keys at its own level only, so the candidates are the same). Base 16
+    only, ``length`` 1..15. Building the join runs no Spark job:
+    - refine, per row: a plain circle (no holes, radius set) by the JVM
+      haversine over the center and radius its cover rows carry; every
+      other shape by the kernel over its JSON spec, LEFT-joined by
+      shape_id. Where Catalyst can prove every shape a plain circle (a
+      literal 'circle' kind, a non-NULL radius and NULL rings, as in
+      spatial_join_circles), it folds the spec join and the UDF away;
+    - strategy: the covers and the specs broadcast when Spark's static size
+      estimate of ``shapes`` is within ``max_broadcast_shapes`` x
+      _BROADCAST_BYTES_PER_SHAPE bytes; beyond it both join unhinted (set
+      ``max_broadcast_shapes`` to 0 to force that). The geometry is never
+      collected."""
     if base != 16:
         raise ValueError('spatial_join_points supports base 16 only')
     if not 1 <= length <= 15:
         raise ValueError('spatial_join_points supports length 1..15')
     spark = points.sparkSession
-    windowed = _with_window(shapes, length)
-    n_shapes, n_verts, n_plain, levels = _catalog_size(windowed)
-    use_broadcast = (n_shapes <= max_broadcast_shapes and
-                     n_verts <= _BROADCAST_MAX_RING_VERTS)
-    all_plain_circles = n_shapes > 0 and n_plain == n_shapes
+    size = shapes._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    use_broadcast = size <= max_broadcast_shapes * _BROADCAST_BYTES_PER_SHAPE
+    hint = F.broadcast if use_broadcast else (lambda df: df)
     gated = time_gated and 'warc_ts' in points.columns
     dt_cols = ['dt_start', 'dt_end'] if gated else []
 
-    # When the JVM predicate is cheap and the covers broadcast, cover no
-    # finer than the parent cell (one char dropped): ~16x fewer rows in the
-    # broadcast relation for a modest candidate inflation the codegen
-    # haversine filter absorbs.
-    floor = 1 if (use_broadcast and all_plain_circles and length >= 2) else 0
-    levels = sorted({max(floor, d) for d in levels}) or [floor]
-    # the time interval, and for plain circles the (center, radius) triple,
-    # ride the cover rows: the gate and the haversine need no second join
-    param_cols = ['_clon', '_clat', '_r'] if all_plain_circles else []
-    covers = _window_cover(windowed, length, floor, carry=dt_cols + param_cols)
+    # the time interval, and the plain-circle flag with the (center,
+    # radius) triple, ride the cover rows: the gate and a circle's
+    # haversine need no second join
+    plain = f'coalesce({_plain_circle_sql(_params_sql(shapes))}, false)'
+    param_cols = ['_plain', '_clon', '_clat', '_r']
+    covers = (_window_cover(_with_window(shapes, length).selectExpr('*', f'{plain} AS _plain'),
+                            length, carry=dt_cols + param_cols)
+              .withColumnRenamed('cell', '_ck'))
 
-    # a point is a level-0 cell: one key per cover level, from the same
-    # quantization as the windows
+    # a point is a level-0 cell: one key per level a cover can use, from
+    # the same quantization as the windows
     qlon, qlat = niemeyer_quantize_sql('lon', 'lat', length)
-    points = points.withColumn('_ck', F.expr(_level_keys_sql(qlon, qlat, 0, levels, length)))
+    points = points.withColumn(
+        '_ck', F.expr(_level_keys_sql(qlon, qlat, 0, range(length), length)))
+    keys = ['_ck']
 
     if salt_shards > 0:
         # replicate the broadcast side per shard; salt the big side
         shards = spark.range(salt_shards).select(F.col('id').cast('int').alias('_shard'))
-        covers = covers.crossJoin(F.broadcast(shards)).withColumn(
-            'join_key', F.concat_ws('#', 'cell', F.col('_shard').cast('string')))
+        covers = covers.crossJoin(F.broadcast(shards))
         points = points.withColumn(
-            'join_key',
-            F.concat_ws('#', F.col('_ck'),
-                        F.pmod(F.xxhash64(*[c for c in ('url', 'lon', 'lat')
-                                            if c in points.columns]),
-                               F.lit(salt_shards)).cast('string')))
-        join_key = 'join_key'
-    else:
-        covers = covers.withColumnRenamed('cell', '_ck')
-        join_key = '_ck'
+            '_shard', F.pmod(F.xxhash64(*[c for c in ('url', 'lon', 'lat')
+                                          if c in points.columns]),
+                             F.lit(salt_shards)).cast('int'))
+        keys.append('_shard')
 
-    covers_sel = covers.select(join_key, 'shape_id', *dt_cols, *param_cols)
-    cand = points.join(F.broadcast(covers_sel) if use_broadcast else covers_sel,
-                       join_key)
+    cand = points.join(hint(covers.select(*keys, 'shape_id', *dt_cols, *param_cols)), keys)
 
     if gated:
         no_dt = F.col('dt_start').isNull() | F.col('dt_end').isNull()
@@ -389,19 +386,15 @@ def spatial_join_points(
             F.col('dt_start'), F.col('dt_end'), F.col('warc_ts'))
         cand = cand.filter(gate)
 
-    if all_plain_circles:
-        # exact containment for a circle is haversine(point, center) <=
-        # radius — the identical formula (and argument order) the NumPy
-        # kernel evaluates (kernels/shapes.py:291-293), as a JVM Column
-        # expression: no Arrow boundary, no Python workers, whole-stage
-        # codegen through the candidate join
-        out = cand.filter(f"{haversine_sql('lon', 'lat', '_clon', '_clat')} <= _r")
-    else:
-        specs = shapes.select('shape_id', _shape_spec_col(shapes).alias('_spec'))
-        pred = _exact_predicate_spec_udf()
-        out = (cand.join(F.broadcast(specs) if use_broadcast else specs, 'shape_id')
-               .filter(pred(F.col('shape_id'), F.col('_spec'),
-                            F.col('lon'), F.col('lat'))))
-    drop = ['_ck', '_spec', 'join_key', '_shard', *dt_cols, *param_cols]
-    return out.drop(*[c for c in drop if c in out.columns])
-
+    # exact containment for a plain circle is haversine(point, center) <=
+    # radius, as a JVM expression in every catalog; only the other shapes
+    # carry a spec, and only their verdict comes from the kernel
+    specs = (shapes.filter(f'NOT {plain}')
+             .select('shape_id', _shape_spec_col(shapes).alias('_spec')))
+    pred = _exact_predicate_spec_udf()
+    out = (cand.join(hint(specs), 'shape_id', 'left')
+           .filter(F.when(F.col('_plain'),
+                          F.expr(f"{haversine_sql('lon', 'lat', '_clon', '_clat')} <= _r"))
+                   .otherwise(pred(F.col('shape_id'), F.col('_spec'),
+                                   F.col('lon'), F.col('lat')))))
+    return out.drop('_ck', '_spec', '_shard', *dt_cols, *param_cols)

@@ -54,7 +54,9 @@ def main() -> int:
     print(f'[{"OK" if pushed else "FAIL"}] q1 pushes the shipdate filter to Parquet')
     ok &= pushed
 
-    # salted spatial join: the salted key joins (hot cells split into shards)
+    # salted spatial join: the numeric (cell key, shard) pair joins (hot
+    # cells split into shards)
+    import re
     from pyspark.sql import functions as F
     from geostructures_spark.operators.spatial_join import spatial_join_points
     em._load(spark, sf, 'customer', 'supplier')
@@ -62,24 +64,27 @@ def main() -> int:
     shapes = em._shapes_from_keys(spark, em._pts_supplier_sql(), '500000.0')
     plan = formatted(spatial_join_points(pts, shapes, length=4, base=16,
                                          time_gated=False, salt_shards=4))
-    salted = 'join_key' in plan and 'BroadcastHashJoin' in plan
-    print(f'[{"OK" if salted else "FAIL"}] salted join keys on cell#shard '
+    salted = (re.search(r'BroadcastHashJoin[^\n]*\nLeft keys \[2\]: '
+                        r'\[_ck#\d+L, _shard#\d+\]', plan) is not None)
+    print(f'[{"OK" if salted else "FAIL"}] salted join keys on (cell key, _shard) '
           f'with the cover side still broadcast')
     ok &= salted
 
-    # all-circle catalog: exact predicate is the JVM haversine expression —
-    # no Python evaluation node anywhere in the join (r6 fast path), for
-    # both the broadcast and the over-budget (no driver collect) plans
+    # all-circle catalog (a literal kind): the exact predicate is the JVM
+    # haversine expression, Catalyst folds the spec join and the UDF away —
+    # no Python evaluation node and no _spec anywhere in the join, for both
+    # the broadcast and the over-budget (no driver collect) plans
     plan = formatted(spatial_join_points(pts, shapes, length=4, base=16,
                                          time_gated=False))
-    jvm_pred = 'EvalPython' not in plan and 'ATAN2' in plan.upper()
+    jvm_pred = ('EvalPython' not in plan and '_spec' not in plan
+                and 'ATAN2' in plan.upper())
     print(f'[{"OK" if jvm_pred else "FAIL"}] all-circle join is pure JVM '
-          f'(no Python eval; haversine in codegen)')
+          f'(no Python eval, no _spec; haversine in codegen)')
     ok &= jvm_pred
     plan = formatted(spatial_join_points(pts, shapes, length=4, base=16,
                                          time_gated=False,
                                          max_broadcast_shapes=0))
-    jvm_pred0 = 'EvalPython' not in plan
+    jvm_pred0 = 'EvalPython' not in plan and '_spec' not in plan
     print(f'[{"OK" if jvm_pred0 else "FAIL"}] over-budget all-circle join '
           f'stays JVM with no driver collect')
     ok &= jvm_pred0
@@ -87,7 +92,6 @@ def main() -> int:
     # non-circle catalogs refine through the JSON-spec predicate: beyond
     # the broadcast budget the spec ships through a shuffled shape_id
     # equi-join; within it through a broadcast one (never collected)
-    import re
     poly = spark.sql(
         "SELECT CAST(qid AS LONG) AS shape_id, 'polygon' AS kind, "
         'CAST(NULL AS struct<center_lon:double,center_lat:double,radius:double>) AS params, '

@@ -1,7 +1,9 @@
 """The spatial join's JVM window cover: exact results against brute force on
-mixed catalogs, the window as a superset of the Python ``hash_shape``
-cover for every shape kind, and the coarser cover level of shapes whose
-window is over the budget at the points' cell length.
+mixed catalogs (mixed-level ones too, within and over the broadcast
+budget), the window as a superset of the Python ``hash_shape`` cover for
+every shape kind, the coarser cover level of shapes whose window is over
+the budget at the points' cell length, and a circle's verdict that does
+not depend on the rest of its catalog.
 """
 
 from collections import Counter
@@ -179,7 +181,7 @@ def test_over_budget_window_covers_at_a_coarser_level(spark):
     shapes = _shapes_df(spark, [
         _shape(1, 'polygon', rings=[_ring((0, 10), (20, 10), (20, 30), (0, 30), (0, 10))]),
         _shape(2, 'box', min_lon=5.0, min_lat=15.0, max_lon=9.0, max_lat=18.0)])
-    assert _catalog_size(_with_window(shapes, 6))[3] == [0, 1]
+    assert _catalog_size(_with_window(shapes, 6))[2] == [0, 1]
     points = _uniform_points(spark, 3000, (-2, 22), (8, 32))
     joined = spatial_join_points(points, shapes, length=6, time_gated=False)
     plan = joined._jdf.queryExecution().executedPlan().toString()
@@ -202,7 +204,7 @@ def test_level_tag_keeps_coinciding_indexes_apart(spark):
     shapes = _shapes_df(spark, [
         _shape(1, 'circle', center_lon=0.0, center_lat=-89.0, radius=300_000.0),
         _shape(2, 'box', min_lon=-170.0, min_lat=-89.5, max_lon=-160.0, max_lat=-89.0)])
-    assert _catalog_size(_with_window(shapes, 6))[3] == [0, 1]
+    assert _catalog_size(_with_window(shapes, 6))[2] == [0, 1]
     points = _uniform_points(spark, 3000, (-180, -90), (-90, -88.5))
     joined = spatial_join_points(points, shapes, length=6, time_gated=False)
     got = Counter((r.shape_id, r.url, r.point_idx) for r in
@@ -264,7 +266,7 @@ def test_shape_join_keys_each_cover_at_its_own_level(spark):
 
     def pairs(shapes):
         win, win_b = _with_window(shapes, 6), _with_window(b, 6)
-        levels = _catalog_size(win, win_b)[3]
+        levels = _catalog_size(win, win_b)[2]
         return levels, {tuple(r) for r in _cover_pairs(win, win_b, levels, 6).collect()}
 
     levels, before = pairs(a)
@@ -287,3 +289,86 @@ def test_shape_join_keys_each_cover_at_its_own_level(spark):
     assert 'Exchange' not in cover._jdf.queryExecution().executedPlan().toString()
     big.unpersist()
     b.unpersist()
+
+
+def test_circle_verdict_does_not_depend_on_its_catalog(spark):
+    """The NumPy kernel's distance_meters and the JVM haversine_sql can
+    differ in the last bit. A circle whose radius lies between the two
+    values of a point must give that point one verdict whether its catalog
+    holds only circles or also a box: a plain circle refines in the JVM in
+    every catalog."""
+    from geostructures_spark.functions.geo import haversine_sql
+    from geostructures_spark.kernels.geodesy import distance_meters
+    from geostructures_spark.operators.spatial_join import spatial_join_points
+    clon, clat = 10.0, 45.0
+    rng = np.random.default_rng(3)
+    lons, lats = rng.uniform(7.0, 13.0, 2000), rng.uniform(43.0, 47.0, 2000)
+    jvm = np.array([r.d for r in spark.createDataFrame(
+        [(float(x), float(y), clon, clat) for x, y in zip(lons, lats)],
+        'lon double, lat double, clon double, clat double').selectExpr(
+        f"{haversine_sql('lon', 'lat', 'clon', 'clat')} AS d").collect()])
+    numpy = distance_meters(lons, lats, clon, clat)
+    k = int(np.flatnonzero(jvm != numpy)[0])
+    radius = float(min(jvm[k], numpy[k]))
+    points = spark.createDataFrame([('u0', 0, float(lons[k]), float(lats[k]))],
+                                   'url string, point_idx int, lon double, lat double')
+    circle = _shape(1, 'circle', center_lon=clon, center_lat=clat, radius=radius)
+    box = _shape(2, 'box', min_lon=-50.0, min_lat=-10.0, max_lon=-49.0, max_lat=-9.0)
+    verdicts = [{r.shape_id for r in spatial_join_points(
+                    points, _shapes_df(spark, catalog), length=6, time_gated=False).collect()}
+                for catalog in ([circle], [circle, box])]
+    assert verdicts[0] == verdicts[1]
+
+
+def test_mixed_level_catalog_matches_brute_force(spark):
+    """Level-0 shapes next to a 120 x 90 degree polygon (covered two or more
+    levels up) and four antimeridian and polar circles, time-gated, within
+    the broadcast budget and over it; over it, with Spark's own broadcast
+    off, no cover side broadcasts."""
+    from pyspark.sql import functions as F
+
+    from geostructures_spark.operators.miner import mine_points
+    from geostructures_spark.operators.spatial_join import _with_window, spatial_join_points
+    from geostructures_spark.sources.pages import pages_df
+    from geostructures_spark.sources.shapes import shapes_df
+    edge = _shapes_df(spark, [
+        _shape(1000, 'polygon', rings=[_ring((-60, -45), (60, -45), (60, 45), (-60, 45),
+                                             (-60, -45))])] + [
+        _shape(1001 + i, 'circle', center_lon=lon, center_lat=lat, radius=r)
+        for i, (lon, lat, r) in enumerate([(179.5, 10.0, 300_000.0), (-179.8, 10.5, 200_000.0),
+                                           (30.0, 86.0, 500_000.0), (0.0, -88.0, 400_000.0)])])
+    shapes = shapes_df(spark, 120, seed=10001).unionByName(
+        edge, allowMissingColumns=True).cache()
+    lvl = {r.shape_id: r._lvl for r in _with_window(shapes, 6).select('shape_id', '_lvl')
+           .collect()}
+    assert lvl[1000] >= 2 and sorted(lvl.values()).count(0) > 100
+
+    mined = mine_points(pages_df(spark, 5000, seed=10001)).select(
+        'url', 'point_idx', 'lon', 'lat', 'warc_ts')
+    rng = np.random.default_rng(11)
+    extra = [(-180.0, 180.0, 80.0, 90.0), (-180.0, 180.0, -90.0, -80.0),
+             (175.0, 180.0, 5.0, 15.0), (-180.0, -175.0, 5.0, 15.0),
+             (-65.0, 65.0, -50.0, 50.0)]
+    rows = [(f'x{b}', i, float(x), float(y))
+            for b, (x0, x1, y0, y1) in enumerate(extra)
+            for i, (x, y) in enumerate(zip(rng.uniform(x0, x1, 400), rng.uniform(y0, y1, 400)))]
+    points = mined.unionByName(
+        spark.createDataFrame(rows, 'url string, point_idx int, lon double, lat double')
+        .withColumn('warc_ts', F.lit('2020-01-05 12:00:00').cast('timestamp'))).cache()
+    want = _brute_force(points, shapes, time_gated=True)
+    assert {sid for sid, _, _ in want} >= {1000, 1001, 1002, 1003, 1004}
+
+    spark.conf.set('spark.sql.autoBroadcastJoinThreshold', '-1')
+    try:
+        for budget in (None, 1):
+            kwargs = {} if budget is None else {'max_broadcast_shapes': budget}
+            joined = spatial_join_points(points, shapes, length=6, time_gated=True, **kwargs)
+            plan = joined._jdf.queryExecution().executedPlan().toString()
+            assert ('BroadcastExchange' in plan) == (budget is None)
+            got = Counter((r.shape_id, r.url, r.point_idx) for r in
+                          joined.select('shape_id', 'url', 'point_idx').collect())
+            assert got == want, budget
+    finally:
+        spark.conf.unset('spark.sql.autoBroadcastJoinThreshold')
+        points.unpersist()
+        shapes.unpersist()

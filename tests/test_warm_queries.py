@@ -2,7 +2,8 @@
 ``_load`` takes each table's schema from ``_TABLE_SCHEMAS`` (no inference
 job), and the session's codegen cache holds every class the headline
 queries generate (no recompile). Also pins how many jobs each headline
-query, and shape_join_intersects, runs while its DataFrame is built."""
+query, and shape_join_intersects, runs while its DataFrame is built, and
+that building spatial_join_points runs none."""
 
 import os
 from contextlib import contextmanager
@@ -25,9 +26,10 @@ BUILD_JOB_BUDGET = {
     'niemeyer_cell_counts': 0,
     'h3_cell_counts': 0,
     'pip_triangle_counts': 0,
-    # spatial_join_points' `_catalog_size` agg (broadcast, kernel and cover
-    # levels); AQE runs it as a shuffle-map job and a result job
-    'spatial_join_circles': 2,
+    # spatial_join_points decides without a job: its points key at every
+    # level, a plain circle refines in the JVM per row, and the broadcast
+    # follows Spark's static size estimate of the catalog
+    'spatial_join_circles': 0,
     'knn_topk': 0,
     'track_speed_stats': 0,
     'minhash_lsh_pairs': 0,
@@ -126,3 +128,22 @@ def test_warm_rerun_compiles_no_code(headline_passes):
 def test_headline_build_job_budget(headline_passes):
     build_jobs, _ = headline_passes[1]
     assert build_jobs == BUILD_JOB_BUDGET
+
+
+def test_spatial_join_points_builds_with_no_job(spark, tmp_path):
+    """A Parquet mixed catalog like the shape_join workload's, and the
+    literal-kind circles of spatial_join_circles: building the join runs no
+    Spark job."""
+    from geostructures_spark.operators.miner import mine_points
+    from geostructures_spark.operators.spatial_join import spatial_join_points
+    from geostructures_spark.sources.pages import pages_df
+    from geostructures_spark.sources.shapes import shapes_df
+    pages_df(spark, 500, seed=10001).write.parquet(str(tmp_path / 'pages'))
+    shapes_df(spark, 120, seed=10001).write.parquet(str(tmp_path / 'shapes'))
+    pages, shapes = (spark.read.parquet(str(tmp_path / n)) for n in ('pages', 'shapes'))
+    with _job_group(spark, 'spatial_join_points-mixed'):
+        spatial_join_points(mine_points(pages), shapes, length=6, time_gated=True)
+    with _job_group(spark, 'spatial_join_points-circles'):
+        em.queries()['spatial_join_circles'](spark, SF001)
+    assert _jobs_in_group(spark, 'spatial_join_points-mixed') == 0
+    assert _jobs_in_group(spark, 'spatial_join_points-circles') == 0
