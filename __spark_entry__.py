@@ -426,17 +426,17 @@ def _knn_duckdb() -> str:
 
 
 def _q_knn_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cell-pruned kNN (the scale path: points shuffle once on cell, query
-    covers expand ``ring`` neighbor hops) — same oracle as the exact
-    knn_topk, proving the pruning is complete at this (length, ring)
-    sizing for the derived data."""
+    """Cell-pruned kNN (the scale path: points key their packed cell in
+    the JVM, query covers expand ``ring`` neighbor hops) — same oracle as
+    the exact knn_topk, proving the pruning is complete at this (length,
+    ring) sizing for the derived data."""
     from geostructures_spark.operators.knn import knn_join
     _load(spark, sf_dir, 'customer', 'supplier')
     pts = spark.sql(_pts_customer_sql()).withColumnRenamed('pid', 'url')
     q = (spark.sql(_pts_supplier_sql())
          .filter(F.col('qid') <= 5)
          .select(F.col('qid').cast('long').alias('query_id'), 'q_lon', 'q_lat'))
-    out = knn_join(pts, q, k=3, length=2, base=16, ring=3)
+    out = knn_join(pts, q, k=3, length=2, ring=3)
     return (out.select('query_id',
                        F.col('neighbor_key').cast('long').alias('neighbor_id'),
                        F.col('rank').cast('int').alias('rank'))
@@ -454,7 +454,7 @@ def _q_knn_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = (spark.sql(_pts_supplier_sql())
          .filter(F.col('qid') <= 5)
          .select(F.col('qid').cast('long').alias('query_id'), 'q_lon', 'q_lat'))
-    out = knn_join_auto(pts, q, k=3, length=2, base=16, init_ring=1,
+    out = knn_join_auto(pts, q, k=3, length=2, init_ring=1,
                         max_ring=4)
     return (out.select('query_id',
                        F.col('neighbor_key').cast('long').alias('neighbor_id'),

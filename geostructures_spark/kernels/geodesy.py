@@ -37,7 +37,7 @@ __all__ = [
     'vincenty_bearing', 'vincenty_destination', 'vincenty_distance',
     'bearing_degrees', 'destination_point', 'distance_meters',
     'round_half_up', 'dist_xyz_meters', 'lonlat_to_xyz',
-    'rotate_coordinates', 'set_geodesic_algorithm',
+    'rotate_coordinates',
 ]
 
 
@@ -269,50 +269,14 @@ def vincenty_destination(lon, lat, bearing_deg, distance_m):
     return np.degrees(lon2), np.degrees(lat2)
 
 
-# --- geodesic algorithm dispatch (reference geodesic.py:343-399) ----------
+# --- the engine's geodesic (reference geodesic.py:358-361) ---------------
+# haversine, the reference's default; the JVM predicates use the same
+# formula (functions/geo.haversine_sql). Vincenty and Karney
+# (kernels/karney.py) are called directly.
 
-_ALGORITHM = 'haversine'
-
-
-def set_geodesic_algorithm(name: str) -> None:
-    """Engine-wide geodesic strategy switch (reference geodesic.py:343-356).
-
-    'karney' is served by the from-scratch exact-integral kernel in
-    kernels/karney.py (geographiclib itself is not installable here); the
-    reference's default is haversine (geodesic.py:358-361).
-    """
-    global _ALGORITHM
-    if name not in ('haversine', 'vincenty', 'karney'):
-        raise ValueError(f'unsupported geodesic algorithm: {name}')
-    _ALGORITHM = name
-
-
-def distance_meters(lon1, lat1, lon2, lat2):
-    if _ALGORITHM == 'vincenty':
-        return vincenty_distance(lon1, lat1, lon2, lat2)
-    if _ALGORITHM == 'karney':
-        from geostructures_spark.kernels.karney import karney_distance
-        return karney_distance(lon1, lat1, lon2, lat2)
-    return haversine_distance(lon1, lat1, lon2, lat2)
-
-
-def bearing_degrees(lon1, lat1, lon2, lat2):
-    if _ALGORITHM == 'vincenty':
-        return vincenty_bearing(lon1, lat1, lon2, lat2)
-    if _ALGORITHM == 'karney':
-        from geostructures_spark.kernels.karney import karney_bearing
-        return karney_bearing(lon1, lat1, lon2, lat2)
-    return haversine_bearing(lon1, lat1, lon2, lat2)
-
-
-def destination_point(lon, lat, bearing_deg, distance_m):
-    if _ALGORITHM == 'vincenty':
-        return vincenty_destination(lon, lat, bearing_deg, distance_m)
-    if _ALGORITHM == 'karney':
-        from geostructures_spark.kernels.karney import karney_destination
-        lon2, lat2, _ = karney_destination(lon, lat, bearing_deg, distance_m)
-        return lon2, lat2
-    return haversine_destination(lon, lat, bearing_deg, distance_m)
+distance_meters = haversine_distance
+bearing_degrees = haversine_bearing
+destination_point = haversine_destination
 
 
 # --- unit-sphere vector distance (reference _geometry.py:185-204) ---------

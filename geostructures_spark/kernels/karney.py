@@ -37,8 +37,8 @@ direct(inverse(p1, p2)) round-trips to < 1e-9 m.
 
 Throughput note: bisection costs ~60 quadrature evaluations per row versus
 GeographicLib's ~4 Newton steps on series, so this kernel is the parity /
-robustness path; the engine's hot joins use haversine (the reference's default,
-geodesic.py:358-361) unless ``set_geodesic_algorithm('karney')`` is chosen.
+robustness path, called directly; the engine's geodesic is haversine (the
+reference's default, geodesic.py:358-361; kernels/geodesy.distance_meters).
 """
 
 from __future__ import annotations

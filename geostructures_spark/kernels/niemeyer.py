@@ -20,7 +20,7 @@ from geostructures_spark.kernels import ensure_malloc_tuned
 
 __all__ = [
     'CHARSETS', 'encode', 'encode_scalar', 'decode', 'decode_scalar',
-    'subhashes', 'surrounding', 'ring_neighbors', 'cell_to_box',
+    'subhashes', 'surrounding', 'cell_to_box',
 ]
 
 # charsets and per-character bit masks (reference geohash.py:40-80)
@@ -173,41 +173,6 @@ def surrounding(cell: str, base: int) -> List[str]:
     from geostructures_spark.kernels.geodesy import normalize_lonlat
     lons, lats = normalize_lonlat(lons, lats)
     return [str(c) for c in encode(lons, lats, length, base)]
-
-
-def ring_neighbors(lons, lats, length: int, base: int,
-                   ring: int) -> np.ndarray:
-    """Vectorized ring expansion: for each point, every cell within
-    ``ring`` Chebyshev hops of the point's cell — the (2r+1)^2 block a
-    BFS over ``surrounding`` reaches, computed with ONE batch encode.
-
-    A point p inside a cell satisfies |p - center| < err per axis, so
-    p + k*2*err lands in the k-th neighbor cell exactly like
-    center + k*2*err does (the scalar BFS offsets from centers); the
-    offsets then pass through the same normalize_lonlat wrap. No decode,
-    no per-cell Python loop (r3-verdict task 6 — knn_join's _expand ran
-    queries x BFS scalar re-encodes).
-
-    Returns an (n, (2*ring+1)^2) cell-string array (duplicates possible
-    at the antimeridian/poles where wrapping folds cells together —
-    callers dedupe per row)."""
-    ensure_malloc_tuned()
-    _check_base(base)
-    from geostructures_spark.kernels.geodesy import normalize_lonlat
-    lons = np.asarray(lons, dtype=np.float64)
-    lats = np.asarray(lats, dtype=np.float64)
-    total_bits = length * _BITS_PER_CHAR[base]
-    nlon = (total_bits + 1) // 2   # lon takes bits 0, 2, 4, ...
-    nlat = total_bits // 2
-    lon_step = 360.0 / (1 << nlon)   # 2 * half-width
-    lat_step = 180.0 / (1 << nlat)
-    d = np.arange(-ring, ring + 1, dtype=np.float64)
-    glon = lons[:, None, None] + (d * lon_step)[None, :, None]
-    glat = lats[:, None, None] + (d * lat_step)[None, None, :]
-    glon, glat = np.broadcast_arrays(glon, glat)
-    wlon, wlat = normalize_lonlat(glon.ravel(), glat.ravel())
-    cells = encode(wlon, wlat, length, base)
-    return cells.reshape(len(lons), -1)
 
 
 def cell_to_box(cell: str, base: int) -> Tuple[float, float, float, float]:

@@ -173,6 +173,15 @@ def main() -> int:
               f'window (no MapInPandas) and joins on a bigint key')
         ok &= window
 
+    # cell-pruned kNN: points and query rings key on the packed BIGINT cell
+    # index in the JVM — no Python evaluation node, a bigint join key
+    plan = formatted(em.queries()['knn_pruned_topk'](spark, sf))
+    knn = ('EvalPython' not in plan and
+           re.search(r'Left keys \[1\]: \[_ck#\d+L\]', plan) is not None)
+    print(f'[{"OK" if knn else "FAIL"}] knn_pruned_topk has no Python eval '
+          f'and joins on a bigint key')
+    ok &= knn
+
     # bucketed co-located join: repeated joins on the points' cell key scan
     # pre-bucketed storage with NO Exchange on either side
     from geostructures_spark.plans.bucketing import bucketed_join, write_bucketed

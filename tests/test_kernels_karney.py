@@ -9,7 +9,6 @@ from-scratch exact-integral kernel (kernels/karney.py).
 import numpy as np
 import pytest
 
-from geostructures_spark.kernels import geodesy as g
 from geostructures_spark.kernels.karney import (
     ellipsoidal_area_batch, ellipsoidal_area_rings, karney_bearing,
     karney_destination, karney_distance, karney_inverse)
@@ -67,21 +66,6 @@ def test_karney_direct_inverse_roundtrip():
     # sub-millimeter round-trip (1e-8 deg ~ 1 mm)
     assert np.allclose(rlon, lon2, atol=1e-7)
     assert np.allclose(rlat, lat2, atol=1e-7)
-
-
-def test_set_geodesic_algorithm_karney_dispatch():
-    # tests/test_geodesic.py:141-144
-    try:
-        g.set_geodesic_algorithm('karney')
-        assert float(g.distance_meters(0.0, 0.0, 0.1, 0.1)) == float(
-            karney_distance(0.0, 0.0, 0.1, 0.1))
-        assert float(g.bearing_degrees(0.0, 0.0, 0.1, 0.1)) == float(
-            karney_bearing(0.0, 0.0, 0.1, 0.1))
-        dlon, dlat = g.destination_point(0.0, 0.0, 90.0, 100.0)
-        klon, klat, _ = karney_destination(0.0, 0.0, 90.0, 100.0)
-        assert float(dlon) == float(klon) and float(dlat) == float(klat)
-    finally:
-        g.set_geodesic_algorithm('haversine')
 
 
 def test_ellipsoidal_area_box_golden():

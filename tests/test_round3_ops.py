@@ -251,7 +251,8 @@ def test_simhash_df_matches_kernel(spark):
 def test_knn_auto_matches_exact_two_configs(spark):
     """knn_join_auto must equal knn_join_exact at two different (length,
     init_ring) operating points — including a deliberately-undersized
-    ring that forces the expand/exact fallback (r2-verdict task 6)."""
+    ring that forces the expand/exact fallback (r2-verdict task 6), a
+    north-polar query and one on a dyadic latitude edge (-45.0)."""
     from pyspark.sql import functions as F
     from geostructures_spark.operators.knn import (
         knn_join_auto, knn_join_exact, suggest_ring)
@@ -263,21 +264,22 @@ def test_knn_auto_matches_exact_two_configs(spark):
                    .alias('lat'))).cache()
     q = spark.createDataFrame(
         [(1, -0.1, 51.5), (2, 139.7, 35.7), (3, 179.95, 0.0),
-         (4, -179.95, 10.0), (5, 12.5, -88.5)],
+         (4, -179.95, 10.0), (5, 12.5, -88.5), (6, 60.0, 89.5),
+         (7, 30.0, -45.0)],
         'query_id long, q_lon double, q_lat double')
     exact = {(r.query_id, r.rank, r.neighbor_key) for r in
              knn_join_exact(pts, q, k=5, point_key='url').collect()}
     # config A: coarse cells, auto ring from density
     a = {(r.query_id, r.rank, r.neighbor_key) for r in
-         knn_join_auto(pts, q, k=5, length=2, base=16,
+         knn_join_auto(pts, q, k=5, length=2,
                        point_key='url').collect()}
     assert a == exact
     # config B: finer cells, adversarially tiny init ring -> must expand
     b = {(r.query_id, r.rank, r.neighbor_key) for r in
-         knn_join_auto(pts, q, k=5, length=3, base=16, init_ring=1,
+         knn_join_auto(pts, q, k=5, length=3, init_ring=1,
                        max_ring=4, point_key='url').collect()}
     assert b == exact
-    assert suggest_ring(pts, k=5, length=2, base=16) >= 1
+    assert suggest_ring(pts, k=5, length=2) >= 1
 
 
 # --- H3 polyfill: antimeridian-crossing outlines ----------------------------

@@ -354,32 +354,45 @@ def test_projection_udf_geographic_dispatch(spark):
     assert abs(row['b']['lon']) < 1e-5
 
 
-# --- vectorized kNN ring expansion (r3-verdict task 6) ----------------------
+# --- kNN query ring on the packed cell key ----------------------------------
 
-def test_ring_neighbors_matches_bfs():
-    """ring_neighbors must reach exactly the cells the scalar BFS over
-    surrounding() reaches, for rings 1-3, including antimeridian-
-    straddling and high-latitude points."""
+def test_ring_neighbors_matches_bfs(spark):
+    """knn_join's SQL ring (_ring_keys_sql) must reach exactly the cells the
+    scalar BFS over surrounding() reaches, with no repeated key, for
+    lengths 1-4 and rings 1-4 and 8, including antimeridian-straddling,
+    polar and dyadic-edge points (a ring across the pole from a latitude
+    edge)."""
+    from geostructures_spark.functions.geo import niemeyer_quantize_sql
     from geostructures_spark.kernels import niemeyer as nie
+    from geostructures_spark.operators.knn import _ring_keys_sql
     pts = [(13.4, 52.5), (-179.98, 10.2), (179.97, -45.0), (2.3, 78.5),
-           (-0.001, 0.001), (100.0, -80.0)]
-    for length, base in ((4, 16), (3, 32)):
-        for ring in (1, 2, 3):
-            lons = np.array([p[0] for p in pts])
-            lats = np.array([p[1] for p in pts])
-            block = nie.ring_neighbors(lons, lats, length, base, ring)
-            for i, (lo, la) in enumerate(pts):
-                center = nie.encode_scalar(lo, la, length, base)
+           (-0.001, 0.001), (100.0, -80.0), (12.5, -88.5), (-140.4, -71.4)]
+    q = spark.createDataFrame([(i, lo, la) for i, (lo, la) in enumerate(pts)],
+                              'query_id int, lon double, lat double')
+    for length in (1, 2, 3, 4):
+        n = 1 << 2 * length
+        qi, qj = niemeyer_quantize_sql('lon', 'lat', length)
+        for ring in (1, 2, 3, 4, 8):
+            rows = q.selectExpr('query_id', f'{qi} AS _qi', f'{qj} AS _qj').selectExpr(
+                'query_id', f"{_ring_keys_sql('_qi', '_qj', ring, length)} AS keys").collect()
+            for r in rows:
+                center = nie.encode_scalar(*pts[r.query_id], length, 16)
                 cells = {center}
                 frontier = {center}
                 for _ in range(ring):
                     nxt = set()
                     for c in frontier:
-                        nxt.update(nie.surrounding(c, base))
+                        nxt.update(nie.surrounding(c, 16))
                     nxt -= cells
                     cells |= nxt
                     frontier = nxt
-                assert set(map(str, block[i])) == cells, (length, base, ring, i)
+                # a key's cell, named by the encode of its center
+                i = np.array([k >> 32 for k in r.keys])
+                j = np.array([k & (n - 1) for k in r.keys])
+                got = nie.encode(-180.0 + (i + 0.5) * 360.0 / n, -90.0 + (j + 0.5) * 180.0 / n,
+                                 length, 16)
+                assert len(got) == len(set(got)), (length, ring, r.query_id)
+                assert set(map(str, got)) == cells, (length, ring, r.query_id)
 
 
 # --- S2 polyfill grid guard (ADVICE r3) -------------------------------------

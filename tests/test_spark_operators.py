@@ -211,9 +211,24 @@ def test_knn_cell_pruned_matches_exact(spark):
     exact = {(r.query_id, r.rank, r.neighbor_key) for r in
              knn_join_exact(pts, q, k=3).collect()}
     pruned = {(r.query_id, r.rank, r.neighbor_key) for r in
-              knn_join(pts, q, k=3, length=2, base=16, ring=1).collect()}
+              knn_join(pts, q, k=3, length=2, ring=1).collect()}
     # hot-cluster queries: ring-1 candidates at length 2 cover the true k
     assert exact == pruned
+
+
+def test_knn_ring_crosses_the_pole_from_a_latitude_edge(spark):
+    """A query exactly on a dyadic latitude edge (-45.0 at length 1) sits in
+    the row next to the south pole; its ring-1 block reflects across the
+    pole into the row on the far side, which holds the nearest point A."""
+    from geostructures_spark.operators.knn import knn_join, knn_join_exact
+    pts = spark.createDataFrame([('A', 135.0, -89.0), ('B', -85.0, -1.0)],
+                                'url string, lon double, lat double')
+    q = spark.createDataFrame([(1, 0.0, -45.0)], 'query_id long, q_lon double, q_lat double')
+    exact = [(r.neighbor_key, round(r.dist_m / 1000)) for r in
+             knn_join_exact(pts, q, k=1).collect()]
+    assert exact == [('A', 5083)]
+    assert [(r.neighbor_key, round(r.dist_m / 1000)) for r in
+            knn_join(pts, q, k=1, length=1, ring=1).collect()] == exact
 
 
 def test_streaming_matches_batch(spark):

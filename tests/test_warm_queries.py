@@ -2,8 +2,8 @@
 ``_load`` takes each table's schema from ``_TABLE_SCHEMAS`` (no inference
 job), and the session's codegen cache holds every class the headline
 queries generate (no recompile). Also pins how many jobs each headline
-query, and shape_join_intersects, runs while its DataFrame is built, and
-that building spatial_join_points runs none."""
+query, shape_join_intersects and the two cell-pruned kNN queries run while
+the DataFrame is built, and that building spatial_join_points runs none."""
 
 import os
 from contextlib import contextmanager
@@ -38,6 +38,11 @@ BUILD_JOB_BUDGET = {
     # cosine_topk_ivf collects the centroids to the driver
     'cosine_topk': 1,
     'events_windowed_agg': 0,
+    # not headline queries: knn_join keys points and query rings in the
+    # JVM, with no probe; knn_join_auto's one certification collect per
+    # ring round (rings 1 and 2 here), five jobs under AQE
+    'knn_pruned_topk': 0,
+    'knn_auto_topk': 10,
     # not a headline query: shape_join's one `_catalog_size` agg over both
     # sides (broadcast budget and cover levels), two jobs under AQE
     'shape_join_intersects': 2,
